@@ -57,10 +57,7 @@ object Bench {
     // prime the session once: parquet footers, Hadoop FS init, first codegen
     try fns(names.head)(spark, sfDir).count()
     catch { case _: Throwable => () }
-    val chains = Set("q_stream_dedup_ingest", "q_stream_ann_ingest",
-      "q_stream_ingest_restart", "q_stream_retune_ingest",
-      "q_stream_retrain_ingest", "q_stream_resize_ingest",
-      "q_stream_calibrate_ingest", "q_stream_image_ingest")
+    val chains = graft.streaming.StreamOps.ingestChains.map(_.name).toSet
     // (median, min); (-1, -1) if any run threw
     val results: Seq[(String, (Double, Double))] = names.map { n =>
       def run(): Boolean =

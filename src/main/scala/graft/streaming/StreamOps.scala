@@ -14,6 +14,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * oracle-checked semantics for these operators.
   */
 object StreamOps {
+  import VersionChain.hadoopFs
 
   /** Hourly tumbling-window counts with a 2h watermark: late events beyond
     * the watermark are dropped, state is bounded (window + watermark is
@@ -261,12 +262,12 @@ object StreamOps {
     * [[graft.queries.CdcOps.qMergeUpsert]]: each micro-batch's per-key
     * delta (event count, value cents) is merged into a keyed state table
     * by one full-outer join, and the state is EXACTLY-ONCE under batch
-    * replay because versions form a deterministic chain: batch N reads
-    * the newest state version `v < N` and overwrites `v=N` wholesale, so
-    * a replayed batch re-reads the same predecessor and rewrites exactly
-    * its own output (same idempotency-by-construction posture as
-    * [[sinkPartitionedByDay]], and the incremental generalisation of the
-    * reference's rebuild, reference src/job.py:296-299).
+    * replay because its versions form a [[VersionChain]] with output
+    * version = batch id: batch N reads the newest committed version
+    * `v < N` and overwrites `v=N` wholesale (same idempotency-by-
+    * construction posture as [[sinkPartitionedByDay]], and the
+    * incremental generalisation of the reference's rebuild, reference
+    * src/job.py:296-299).
     *
     * The per-batch cost is one keyed shuffle join plus a state rewrite;
     * at 100 TB the refinement is hash-bucketed state with per-bucket
@@ -282,8 +283,7 @@ object StreamOps {
     * the v=0 write silently discards all accumulated state. Failing fast
     * here turns that silent data loss into a constructor error. Versions
     * older than the newest three are pruned after each successful write
-    * (three, not one: a checkpoint-replayed batch N re-reads newest
-    * v < N, so its predecessor must survive batch N's own prune). */
+    * ([[VersionChain.prune]]). */
   def mergeUpsertSink(stream: DataFrame, statePath: String,
       checkpointLocation: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[
@@ -294,16 +294,17 @@ object StreamOps {
     stream.writeStream
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMergeBatch(batch, batchId, statePath)
+        applyMergeBatch(new VersionChain(batch.sparkSession, statePath),
+          batch, batchId)
       }
   }
 
   /** The per-batch merge behind [[mergeUpsertSink]], factored out so
     * replay idempotence is testable directly. Input batch: (user_id,
     * value); state row: (user_id, n, cents). */
-  private[graft] def applyMergeBatch(batch: DataFrame, batchId: Long,
-      statePath: String): Unit =
-    mergeDeltaInto(deltaOf(batch), batchId, statePath)
+  private[graft] def applyMergeBatch(c: VersionChain, batch: DataFrame,
+      batchId: Long): Unit =
+    mergeDeltaInto(c, deltaOf(batch), batchId)
 
   /** Per-key delta of one micro-batch: (user_id, dn, dc). */
   private def deltaOf(batch: DataFrame): DataFrame =
@@ -311,85 +312,19 @@ object StreamOps {
       .agg(count(lit(1)).cast("long").as("dn"),
         sum(round(col("value") * 100, 0).cast("long")).as("dc"))
 
-  /** Versions under `root` whose write COMMITTED (the `_SUCCESS` marker
-    * the parquet job commit protocol writes last). A crash mid-write
-    * leaves a `v=` directory with some task-committed part files and no
-    * marker — a TORN version that must be invisible to every reader:
-    * the state read surface would serve partial sums, and (defensively)
-    * a merge must never chain off one. The chaos spec in StreamOpsSpec
-    * pins this by planting exactly such a directory. */
-  private[graft] def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(_.getPath.getName.startsWith("v="))
-      .filter(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.getName.drop(2).toLong)
+  private def emptyMergeState(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id BIGINT, n BIGINT, cents BIGINT"))
 
-  /** Output-file sizing for a state-version write (r15, guide §6
-    * "sensible output file sizing" / small-files): the write coalesces
-    * to ⌈source bytes / spark.graft.stateFileBytes (64 MB)⌉ partitions,
-    * where the source bytes are the on-disk length of the version(s)
-    * the write derives from — one driver-side ContentSummary call, no
-    * extra Spark job. Why: every state version was written at the
-    * session's shuffle width, so a ~KB state became 8-16 near-empty
-    * files that every later read re-split into 8-16 tasks (JobProfile:
-    * the bucketed merge gate ran 32 bucket-merge jobs of 16 tasks and
-    * 0.25 s each over KB-sized buckets). Bytes-derived, not a constant:
-    * a TB-scale state still writes one file per 64 MB.
-    *
-    * `repartition`, NOT `coalesce` (r15, measured the hard way):
-    * coalesce is NARROW, so coalesce(1) folds every narrow ancestor —
-    * including LAZY localCheckpoint blocks, which materialize inside
-    * the consuming job — into the single write task, serializing the
-    * chain's whole screen/banding/assignment compute (the first cut
-    * shipped coalesce and the ANN chains nondeterministically ran 2-3×
-    * their medians). The repartition exchange keeps upstream compute at
-    * its natural width and moves only the KB-scale result to the one
-    * writer. */
-  private def sizedForState(df: DataFrame,
-      fs: org.apache.hadoop.fs.FileSystem,
-      sources: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
-    val target = df.sparkSession.conf
-      .get("spark.graft.stateFileBytes", (64L * 1024 * 1024).toString)
-      .toLong
-    val bytes = sources.filter(fs.exists)
-      .map(p => fs.getContentSummary(p).getLength).sum
-    df.repartition(math.max(1L, (bytes + target - 1) / target)
-      .min(1 << 20).toInt)
-  }
-
-  /** Row-count flavor of [[sizedForState]] for writes whose row count
-    * is already a driver scalar (seed assignments, quantizer matrices —
-    * a k-row `Seq(...).toDF` otherwise writes defaultParallelism near-
-    * empty files): one output partition per 64 Ki rows, the FrameMemo
-    * RowsPerPartition sizing. Repartition, not coalesce — see
-    * [[sizedForState]]. */
-  private def sizedByRows(df: DataFrame, rows: Long): DataFrame =
-    df.repartition(math.max(1L, (rows + 65535) / 65536).min(1 << 20).toInt)
-
-  /** One version-chain merge step under `statePath`: read the newest
-    * state version < batchId, full-outer-merge the delta, overwrite
-    * v=batchId, prune to the newest 3 versions. */
-  private def mergeDeltaInto(delta: DataFrame, batchId: Long,
-      statePath: String): Unit = {
-    val spark = delta.sparkSession
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sessionState.newHadoopConf())
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val prevVersion = committedVersions(fs, root)
-      .filter(_ < batchId) // replay must NOT read its own prior output
-      .sorted.lastOption
-    val prev = prevVersion match {
-      case Some(v) => spark.read.parquet(s"$statePath/v=$v")
-      case None =>
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "user_id BIGINT, n BIGINT, cents BIGINT"))
-    }
-    val merged = prev
+  /** One merge step: full-outer-merge the delta into the newest
+    * committed version below `batchId`, write `v=batchId`, prune to the
+    * newest 3 versions. */
+  private def mergeDeltaInto(c: VersionChain, delta: DataFrame,
+      batchId: Long): Unit = {
+    val prev = c.prev(batchId)
+    val merged = prev.fold(emptyMergeState(delta.sparkSession))(c.read(_))
       .select(col("user_id").as("pk"), col("n"), col("cents"))
       .join(delta, col("pk") === col("user_id"), "full_outer")
       .select(
@@ -398,34 +333,22 @@ object StreamOps {
           .cast("long").as("n"),
         (coalesce(col("cents"), lit(0L)) + coalesce(col("dc"), lit(0L)))
           .cast("long").as("cents"))
-    sizedForState(merged, fs, prevVersion.toSeq.map(v =>
-        new org.apache.hadoop.fs.Path(s"$statePath/v=$v")))
-      .write.mode("overwrite").parquet(s"$statePath/v=$batchId")
-    // prune: keep the newest 3 versions ≤ batchId (replay of batch N needs
-    // newest v < N alive); growth was one full state copy per micro-batch
-    val keep = fs.listStatus(root).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
-      .sorted.reverse
-    keep.drop(3).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v=$v"), true)
-    }
+    c.commit(batchId, prev)(merged)
+    c.prune(3)
   }
 
   /** Hash-bucketed state — the 100 TB refinement promised in
-    * [[mergeUpsertSink]]'s scaladoc, now real: state lives in `buckets`
-    * hash partitions (`bucket=<b>/v=<n>`), each with its OWN version
-    * chain, and a micro-batch rewrites ONLY the buckets its delta keys
-    * hash into. The per-bucket replay argument is [[applyMergeBatch]]'s
-    * unchanged — a replayed batch re-reads each touched bucket's newest
-    * v < batchId and rewrites exactly its own v=batchId — and a bucket
-    * the batch does not touch keeps its newest version, which remains
-    * the read surface ([[readBucketedState]]). Rewrite cost per batch
-    * drops from O(|state|) to O(Σ touched-bucket sizes): with keys
-    * hashing uniformly and a micro-batch touching k distinct keys, that
-    * is ≤ min(k, buckets)/buckets of the state. */
-  private[graft] def applyMergeBatchBucketed(batch: DataFrame,
-      batchId: Long, statePath: String, buckets: Int): Unit = {
+    * [[mergeUpsertSink]]'s scaladoc: state lives in `buckets` hash
+    * partitions (`bucket=<b>/v=<n>`), each its OWN [[VersionChain]]
+    * ([[VersionChain.bucket]]), and a micro-batch rewrites ONLY the
+    * buckets its delta keys hash into. A bucket the batch does not touch
+    * keeps its newest version, which remains the read surface
+    * ([[readBucketedState]]). Rewrite cost per batch drops from
+    * O(|state|) to O(Σ touched-bucket sizes): with keys hashing
+    * uniformly and a micro-batch touching k distinct keys, that is
+    * ≤ min(k, buckets)/buckets of the state. */
+  private[graft] def applyMergeBatchBucketed(c: VersionChain,
+      batch: DataFrame, batchId: Long, buckets: Int): Unit = {
     val delta = deltaOf(batch)
       .withColumn("__b", pmod(col("user_id"), lit(buckets.toLong)))
       .localCheckpoint(true) // one delta computation, reused per bucket
@@ -446,8 +369,8 @@ object StreamOps {
       touched.map { b =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit =
-            mergeDeltaInto(delta.filter(col("__b") === b).drop("__b"),
-              batchId, s"$statePath/bucket=$b")
+            mergeDeltaInto(c.bucket(b),
+              delta.filter(col("__b") === b).drop("__b"), batchId)
         })
       }.foreach { f =>
         try f.get()
@@ -472,7 +395,9 @@ object StreamOps {
     stream.writeStream
       .option("checkpointLocation", checkpointLocation)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyMergeBatchBucketed(batch, batchId, statePath, buckets)
+        applyMergeBatchBucketed(
+          new VersionChain(batch.sparkSession, statePath), batch, batchId,
+          buckets)
       }
   }
 
@@ -483,8 +408,7 @@ object StreamOps {
     * surface serves the bucket's previous committed version until the
     * replayed batch rewrites the torn one (chaos-spec-pinned). */
   def readBucketedState(spark: SparkSession, statePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sessionState.newHadoopConf())
+    val fs = hadoopFs(spark, statePath)
     val root = new org.apache.hadoop.fs.Path(statePath)
     val newest =
       if (!fs.exists(root)) Seq.empty[String]
@@ -492,15 +416,10 @@ object StreamOps {
         .map(_.getPath)
         .filter(_.getName.startsWith("bucket="))
         .flatMap { b =>
-          committedVersions(fs, b)
-            .sorted.lastOption
-            .map(v => s"$b/v=$v")
+          val c = new VersionChain(spark, b.toString)
+          c.committed.lastOption.map(c.path("v", _))
         }
-    if (newest.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, n BIGINT, cents BIGINT"))
+    if (newest.isEmpty) emptyMergeState(spark)
     else spark.read.parquet(newest: _*)
   }
 
@@ -759,16 +678,6 @@ object StreamOps {
   private[graft] def scratchRoot(s: SparkSession): String =
     s.conf.get("spark.graft.scratchRoot", "/tmp")
 
-  private def hadoopFs(s: SparkSession,
-      path: String): org.apache.hadoop.fs.FileSystem =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path),
-      s.sessionState.newHadoopConf())
-
-  private def deletePath(s: SparkSession, path: String): Unit = {
-    hadoopFs(s, path).delete(new org.apache.hadoop.fs.Path(path), true)
-    ()
-  }
-
   /** Register a JVM-exit delete for a whole-JVM scratch dir. The hook
     * captures the Hadoop conf, not the (possibly stopped-by-then)
     * session. */
@@ -786,32 +695,34 @@ object StreamOps {
   /** Run `body` (which starts and drains a streaming query) with the
     * session's shuffle-partition count — which Structured Streaming
     * latches at query start as its STATE-STORE partition count — set to
-    * `spark.graft.streamStatePartitions` (default 8), restoring the
-    * previous value after. Why: per-micro-batch cost at gate scale is
-    * dominated by per-partition state-store open/commit/maintenance (32
-    * stores × 6 batches of file ops for a 150-key state), not by data —
-    * measured 2× on the sessionize gate and 2.5× on conversionLag at
-    * sf0.1 (9.4 → 5.2 s, 8.8 → 3.5 s medians). At production scale the
-    * knob RISES with the keyspace (state partitions bound stateful
-    * parallelism and per-store memory); it exists because the right
-    * number tracks the state's keyspace, not the batch engine's shuffle
-    * width. */
-  private def withStatePartitions[T](s: SparkSession)(body: => T): T = {
+    * `spark.graft.streamStatePartitions` (default 8), and AQE off,
+    * restoring both previous values after. Why the width: per-micro-batch
+    * cost at gate scale is dominated by per-partition state-store
+    * open/commit/maintenance (32 stores × 6 batches of file ops for a
+    * 150-key state), not by data — measured 2× on the sessionize gate and
+    * 2.5× on conversionLag at sf0.1 (9.4 → 5.2 s, 8.8 → 3.5 s medians).
+    * At production scale the knob RISES with the keyspace (state
+    * partitions bound stateful parallelism and per-store memory); it
+    * exists because the right number tracks the state's keyspace, not the
+    * batch engine's shuffle width. Why AQE off: a chain's maintenance
+    * batch is a LATENCY-bound sequence of small plans (screen → ledger
+    * write → fold write), and AQE turns every Exchange into its own
+    * materialized query stage — a separate job plus a driver
+    * re-optimization pause (the dedup chain measured 75 jobs/run with AQE
+    * vs 33 without); turning it back on measured neutral at widths 4 and
+    * 32, so it is not a knob.
+    *
+    * Both settings are SESSION-global: this assumes one thread plans
+    * queries on the session while `body` runs. Its callers are
+    * [[VersionChain.run]] and the three memory-sink gates. */
+  private[streaming] def withStatePartitions[T](s: SparkSession)(
+      body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val aqeKey = "spark.sql.adaptive.enabled"
     val prev = s.conf.get(key)
     val prevAqe = s.conf.get(aqeKey)
     s.conf.set(key, s.conf.get("spark.graft.streamStatePartitions", "8"))
-    // AQE off for the per-batch sink bodies (r15, measured): a
-    // maintenance batch here is a LATENCY-bound sequence of small plans
-    // (screen → ledger write → fold write), and AQE turns every
-    // Exchange into its own materialized query stage — a separate job
-    // plus a driver re-optimization pause. JobProfile measured the
-    // dedup chain at 75 jobs/run with AQE vs 33 without (−1.8 s of a
-    // 7.9 s run; retune −1.2 s) with the 8-partition state width making
-    // coalescing moot. Parameterized: a production chain whose batches
-    // shuffle GBs wants it back on — set spark.graft.streamBatchAQE.
-    s.conf.set(aqeKey, s.conf.get("spark.graft.streamBatchAQE", "false"))
+    s.conf.set(aqeKey, "false")
     try body finally {
       s.conf.set(key, prev)
       s.conf.set(aqeKey, prevAqe)
@@ -839,7 +750,7 @@ object StreamOps {
       s.table(name).localCheckpoint(true)
     } finally {
       s.catalog.dropTempView(name)
-      deletePath(s, ckpt)
+      VersionChain.delete(s, ckpt)
     }
   }
 
@@ -905,89 +816,88 @@ object StreamOps {
     * version under `statePath` (torn versions invisible — same
     * `_SUCCESS`-gated rule the merge itself chains by). */
   def readMergedState(spark: SparkSession, statePath: String): DataFrame = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(statePath), spark.sessionState.newHadoopConf())
-    val v = committedVersions(fs,
-      new org.apache.hadoop.fs.Path(statePath)).sorted.lastOption
-      .getOrElse(sys.error(s"no committed merge state under $statePath"))
-    spark.read.parquet(s"$statePath/v=$v")
+    val c = new VersionChain(spark, statePath)
+    c.read(c.newest)
   }
+
+  /** Per-JVM input splits, one per (kind, scratchRoot, sfDir). */
+  private val splits =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** Per-key memoized split build (ADVICE r10 #4): `computeIfAbsent`
+    * runs the Spark split job under the KEY's bin lock only, so
+    * concurrent first-touches of different sfDirs (or scratch roots)
+    * build in parallel instead of serializing on a global monitor; two
+    * racing first-touches of the SAME key still share one build. The
+    * split is scratch `graft_<name>_split_<uuid>` under [[scratchRoot]],
+    * reused for the whole JVM and deleted at exit. */
+  private def cachedSplit(s: SparkSession, d: String, name: String)(
+      build: String => Unit): String =
+    splits.computeIfAbsent(s"$name|${scratchRoot(s)}|$d", _ => {
+      val dir = s"${scratchRoot(s)}/graft_${name}_split_" +
+        java.util.UUID.randomUUID()
+      build(dir)
+      deleteAtExit(s, dir)
+      dir
+    })
+
+  /** Write each frame as ONE parquet file `<prefix>_<kk>.parquet` under
+    * `dir`, with strictly increasing modification times 60 s apart: the
+    * file source processes oldest-first, so `maxFilesPerTrigger=1`
+    * delivers exactly this ordered micro-batch sequence. */
+  private def writeOrderedFiles(s: SparkSession, dir: String,
+      prefix: String, files: Seq[DataFrame]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val fs = hadoopFs(s, dir)
+    val t0 = System.currentTimeMillis()
+    files.zipWithIndex.foreach { case (df, k) =>
+      val tmp = s"$dir/__tmp"
+      df.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = fs.listStatus(new Path(tmp)).map(_.getPath)
+        .find(_.getName.startsWith("part-"))
+        .getOrElse(sys.error(s"no part file written under $tmp"))
+      val target = new Path(dir, f"${prefix}_$k%02d.parquet")
+      fs.rename(part, target)
+      fs.delete(new Path(tmp), true)
+      fs.setTimes(target, t0 + k * 60000L, -1)
+    }
+  }
+
+  /** An ordered split ([[writeOrderedFiles]]) built once per
+    * (scratchRoot, sfDir) per JVM ([[cachedSplit]]). */
+  private def orderedSplit(s: SparkSession, d: String, name: String,
+      prefix: String)(files: => Seq[DataFrame]): String =
+    cachedSplit(s, d, name)(writeOrderedFiles(s, _, prefix, files))
 
   /** One split of the events table into 4 parquet files per sfDir, so
     * the file source delivers a genuine MULTI-batch stream
     * (maxFilesPerTrigger=1 → 4 micro-batches, 4 chained merge steps)
-    * instead of collapsing the whole table into one batch. Built once
-    * per sfDir per JVM — the final merged state is batching-invariant
-    * (per-user sums are associative), which is exactly what the oracle
-    * gate checks. */
-  private val splitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Per-key memoized build (ADVICE r10 #4): `computeIfAbsent` runs the
-    * Spark split job under the KEY's bin lock only, so concurrent
-    * first-touches of different sfDirs (or scratch roots) build in
-    * parallel instead of serializing on a global monitor; two racing
-    * first-touches of the SAME key still share one build. */
+    * instead of collapsing the whole table into one batch — the final
+    * merged state is batching-invariant (per-user sums are
+    * associative), which is exactly what the oracle gate checks. */
   private def eventsSplit(s: SparkSession, d: String): String =
-    splitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      val p = s"${scratchRoot(s)}/graft_stream_split_" +
-        java.util.UUID.randomUUID()
+    cachedSplit(s, d, "stream")(p =>
       graft.io.Tables.load(s, d, "events").select("user_id", "value")
-        .repartition(4).write.mode("overwrite").parquet(p)
-      // scratch: reused for the whole JVM, deleted at exit
-      deleteAtExit(s, p)
-      p
-    })
+        .repartition(4).write.mode("overwrite").parquet(p))
 
-  /** Drive one merge-sink flavor over the 4-file micro-batch stream,
-    * read its final state, and CLEAN UP the run's scratch: state and
-    * checkpoint dirs are per-invocation (globally UUID-unique — a
-    * reused checkpoint from an earlier process would resume ITS
-    * file-source log instead of streaming this split), so repeated
-    * bench/verify runs must not grow /tmp without bound. The state is
-    * localCheckpointed into block storage BEFORE deletion so the
-    * returned frame stays valid. */
-  private def runMergeStream(s: SparkSession, d: String,
-      sink: (DataFrame, String, String) =>
-        org.apache.spark.sql.streaming.DataStreamWriter[
-          org.apache.spark.sql.Row],
-      read: (SparkSession, String) => DataFrame): DataFrame = {
+  /** A merge-sink chain over the 4-file events split: no seed, output
+    * version = batch id. */
+  private def mergeChain(s: SparkSession, d: String,
+      step: (VersionChain, DataFrame, Long) => Unit): VersionChain.Spec = {
     graft.io.Tables.ensureSessionRegistered(s)
-    val src = eventsSplit(s, d)
-    val runId = java.util.UUID.randomUUID()
-    val root = scratchRoot(s)
-    val state = s"$root/graft_merge_state_$runId"
-    val ckpt = s"$root/graft_merge_ckpt_$runId"
-    // scratch deletion in `finally` (ADVICE r10 #3): a sink failure or a
-    // readMergedState error must not leave the per-run dirs behind —
-    // repeated failing runs would otherwise grow the scratch root, the
-    // exact leak the success path's hygiene pin guards against
-    try {
-      // per-batch merge jobs run with streaming's AQE disabled, so the
-      // 150-key deltas would otherwise shuffle at full batch width —
-      // same state-partition sizing rationale as [[withStatePartitions]]
-      withStatePartitions(s) {
-        val schema = s.read.parquet(src).schema
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(src)
-        val q = sink(stream, state, ckpt).start()
-        try q.processAllAvailable() finally q.stop()
-        read(s, state).orderBy("user_id").localCheckpoint(true)
-      }
-    } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+    VersionChain.Spec("merge", eventsSplit(s, d), _ => (), step,
+      seeded = false)
   }
 
   /** Oracle-gated run of the MERGE upsert sink (VERDICT r9 next #6,
-    * second streaming row): events stream through
-    * [[mergeUpsertSink]]'s foreachBatch version-chain merge in 4
-    * micro-batches — each step full-outer-merges the batch's per-user
-    * delta into the newest committed state version and writes the next
-    * version — and the FINAL committed state is the result. The DuckDB
-    * oracle is the whole-table aggregate, so the gate checks that 4
-    * chained incremental merges land value-exactly on the batch
-    * answer: the exactly-once versioning (replay reads newest v <
-    * batchId, never its own output) composed across a real micro-batch
-    * sequence, not a single-step spec fixture.
+    * second streaming row): events stream through [[applyMergeBatch]]'s
+    * version-chain merge — the body of [[mergeUpsertSink]] — in 4
+    * micro-batches, each step full-outer-merging the batch's per-user
+    * delta into the newest committed state version, and the FINAL
+    * committed state is the result, localCheckpointed before
+    * [[VersionChain.run]] deletes the run's scratch. The DuckDB oracle is
+    * the whole-table aggregate, so the gate checks that 4 chained
+    * incremental merges land value-exactly on the batch answer.
     *
     * Scale posture: state rewrite per batch is the flat chain's
     * O(|state|) — the bucketed sibling ([[qStreamMergeBucketed]]) is
@@ -998,12 +908,13 @@ object StreamOps {
       |       CAST(COALESCE(SUM(CAST(ROUND(value*100) AS BIGINT)), 0)
       |            AS BIGINT) AS cents
       |FROM events GROUP BY 1 ORDER BY user_id""".stripMargin) { (s, d) =>
-    runMergeStream(s, d, mergeUpsertSink(_, _, _), readMergedState)
+    VersionChain.run(s, mergeChain(s, d, applyMergeBatch))(c =>
+      readMergedState(s, c.state).orderBy("user_id").localCheckpoint(true))
   }
 
   /** [[qStreamMerge]]'s BUCKETED sibling — the 100 TB merge shape gets
     * its own oracle row: the same 4-file micro-batch stream drives
-    * [[mergeUpsertSinkBucketed]] (8 hash buckets, each with its own
+    * [[applyMergeBatchBucketed]] (8 hash buckets, each with its own
     * version chain; a batch rewrites ONLY the buckets its delta keys
     * hash into), and the result is [[readBucketedState]]'s union of
     * per-bucket newest committed versions. The oracle is the identical
@@ -1016,8 +927,9 @@ object StreamOps {
         |       CAST(COALESCE(SUM(CAST(ROUND(value*100) AS BIGINT)), 0)
         |            AS BIGINT) AS cents
         |FROM events GROUP BY 1 ORDER BY user_id""".stripMargin) { (s, d) =>
-      runMergeStream(s, d,
-        mergeUpsertSinkBucketed(_, _, _, buckets = 8), readBucketedState)
+      VersionChain.run(s,
+        mergeChain(s, d, applyMergeBatchBucketed(_, _, _, buckets = 8)))(c =>
+        readBucketedState(s, c.state).orderBy("user_id").localCheckpoint(true))
     }
 
   /** Split metadata for the STATEFUL streaming gates: the split path,
@@ -1061,17 +973,13 @@ object StreamOps {
     *     around batches 2–3), so the timeout path runs mid-stream too,
     *     not only at the sentinel flush.
     *
-    * File-source ordering: files are named in order AND given strictly
-    * increasing modification times (60 s apart) — the file source
-    * processes oldest-first, so `maxFilesPerTrigger=1` yields exactly
-    * this 6-batch sequence. */
+    * File order is [[writeOrderedFiles]]'s, so `maxFilesPerTrigger=1`
+    * yields exactly this 6-batch sequence. */
   private[graft] def statefulSplit(s: SparkSession,
       d: String): StatefulSplit =
     statefulSplitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      import org.apache.hadoop.fs.Path
       val dir = s"${scratchRoot(s)}/graft_stateful_split_" +
         java.util.UUID.randomUUID()
-      val fs = hadoopFs(s, dir)
       val ev = graft.io.Tables.load(s, d, "events")
         .select("user_id", "event_id", "event_type", "ts")
       val Array(minUs, maxUs) = ev
@@ -1097,20 +1005,8 @@ object StreamOps {
         Seq((-1L, id, "sentinel", new java.sql.Timestamp(ms)))
           .toDF("user_id", "event_id", "event_type", "ts")
       }
-      val files = slices ++
-        Seq(sentinel(-1L, sentA), sentinel(-2L, sentA + 3600000L))
-      val t0 = System.currentTimeMillis()
-      files.zipWithIndex.foreach { case (df, k) =>
-        val tmp = s"$dir/__tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val target = new Path(dir, f"ev_$k%02d.parquet")
-        fs.rename(part, target)
-        fs.delete(new Path(tmp), true)
-        fs.setTimes(target, t0 + k * 60000L, -1)
-      }
+      writeOrderedFiles(s, dir, "ev", slices ++
+        Seq(sentinel(-1L, sentA), sentinel(-2L, sentA + 3600000L)))
       // authoritative no-drop check: at batch k the watermark is
       // max-ts(files < k) − delay; every file-k row must be at/above it
       val stats = s.read.parquet(dir)
@@ -1244,181 +1140,131 @@ object StreamOps {
     * corpus = the remaining six `doc_id % 10` slices. */
   private[graft] val IngestSlices: Seq[Long] = Seq(0L, 5L, 3L, 8L)
 
-  private val docsSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Ordered 4-file split of the documents table (one file per
-    * [[IngestSlices]] slice, strictly increasing mtimes so the file
-    * source delivers them as 4 micro-batches in slice order) — built
-    * once per (scratchRoot, sfDir) per JVM, deleted at exit. */
-  private[graft] def docsSplit(s: SparkSession, d: String): String =
-    docsSplitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      import org.apache.hadoop.fs.Path
-      val dir = s"${scratchRoot(s)}/graft_docs_split_" +
-        java.util.UUID.randomUUID()
-      val fs = hadoopFs(s, dir)
+  /** Ordered 4-file split of the documents table, one file per
+    * [[IngestSlices]] slice ([[orderedSplit]]). */
+  private def docsSplit(s: SparkSession, d: String): String =
+    orderedSplit(s, d, "docs", "docs") {
       val docs = graft.io.Tables.load(s, d, "documents")
         .select("doc_id", "text")
-      val t0 = System.currentTimeMillis()
-      IngestSlices.zipWithIndex.foreach { case (m, k) =>
-        val tmp = s"$dir/__tmp"
-        docs.filter(pmod(col("doc_id"), lit(10L)) === m)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val target = new Path(dir, f"docs_$k%02d.parquet")
-        fs.rename(part, target)
-        fs.delete(new Path(tmp), true)
-        fs.setTimes(target, t0 + k * 60000L, -1)
-      }
-      deleteAtExit(s, dir)
-      dir
-    })
+      IngestSlices.map(m => docs.filter(pmod(col("doc_id"), lit(10L)) === m))
+    }
 
-  /** One admit→fold step of the streaming ingest sink: screen the
+  /** Maintenance budget for the LIVE-STREAM retune gate: the size-biased
+    * mean bucket occupancy Σocc²/Σocc a band may reach before the
+    * between-batches maintenance check re-bands the index. The gate's
+    * default (1.0) is the strictest SLO — any co-located signature pair
+    * anywhere flags the move — chosen so the documents corpus's own
+    * statistics (it HAS near-dups, so some 4×4 bucket holds ≥ 2 docs)
+    * demand the swap and the gate exercises the full
+    * decision→swap→post-swap-screen path; the DECISION itself is still
+    * computed from the folded index in both engines, and
+    * `StreamOpsSpec` drives the opposite branch (budget high → no swap)
+    * to pin that the flag, not the schedule, is what acts. */
+  val StreamOccBudget: Double = graft.similarity.Similarity
+    .doubleKnob("GRAFT_STREAM_OCC_BUDGET", 1.0, 0.0, 1e9)
+
+  /** The micro-batch after whose fold the in-stream maintenance check
+    * runs (the swap, if flagged, lands in that batch's output version —
+    * see [[applyIngestBatch]] for why it must). */
+  private[graft] val RetuneAfterBatch = 1L
+
+  /** One admit→fold step of the streaming dedup ingest sink: screen the
     * micro-batch against the newest committed index version, write the
     * batch's verdict ledger, fold the survivors' bands into the next
-    * index version. Exactly-once by the same version-chain argument as
-    * [[applyMergeBatch]], shifted by one because the BASE index is
-    * seeded at v=0 before the stream starts: batch N reads the newest
-    * committed v ≤ N (its own output is v=N+1, so a replay never chains
-    * off itself) and overwrites v=N+1 and its own `b=N` verdict
-    * directory. The batch's shingles and bands are computed from the
-    * STREAMED text — the index's content derives from what arrived, the
-    * corpus table supplies only the verify join's shingle sets (which a
-    * production pipeline would keep alongside the banding). */
-  private[graft] def applyIngestBatch(batch: DataFrame, batchId: Long,
-      statePath: String, verdictsPath: String, corpusSh: DataFrame): Unit = {
-    val s = batch.sparkSession
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
+    * index version — a seeded [[VersionChain]] (base index at v=0). The
+    * batch's shingles and bands are computed from the STREAMED text —
+    * the index's content derives from what arrived, the corpus table
+    * supplies only the verify join's shingle sets (which a production
+    * pipeline would keep alongside the banding).
+    *
+    * `retune = Some(budget)` adds the MAINTAIN step of the retune-aware
+    * chain. (1) Index versions carry their banding SHAPE — a constant
+    * `nb` column (bands; rows per band = K/nb) — because after a retune
+    * the arriving batch must probe with bands projected at the INDEX's
+    * shape, not a compile-time constant; the probe reads `nb` from the
+    * version it screens against (1-row read of an RLE'd constant
+    * column). (2) On the maintenance batch, after the fold, the
+    * occupancy monitor runs over the folded index and
+    * [[graft.dedup.Dedup.retuneIfNeeded]] re-bands the accumulated state
+    * at 2×8 IFF any band is over `budget` — and the swapped index is the
+    * batch's output version, so a replay re-derives fold, monitor,
+    * decision and re-band identically (the chain contract). Re-banding
+    * needs signatures, not just the standing band rows; the roster of
+    * admitted docs is the index's distinct doc_ids and `corpusSh`
+    * supplies their shingle sets (the signature store a production
+    * pipeline keeps alongside the banding). */
+  private[graft] def applyIngestBatch(c: VersionChain, batch: DataFrame,
+      batchId: Long, corpusSh: DataFrame,
+      retune: Option[Double] = None): Unit = {
+    val K = graft.functions.TextHash.K
     val bsh = graft.functions.TextHash
       .addShingleHashes(batch, col("text")).select("doc_id", "hs")
       // two consumers (bands + verify), one compute; LAZY (r14): the
       // blocks materialize inside the ledger write's job instead of a
       // dedicated per-batch barrier job
       .localCheckpoint(false)
-    val bands = graft.dedup.Dedup.lshBands(bsh)
+    val prev = c.base(batchId)
+    val index = c.read(prev)
+    val nb =
+      if (retune.isEmpty) graft.functions.TextHash.Bands
+      else index.select("nb").head().getInt(0)
+    val bands = graft.dedup.Dedup.lshBandsWith(bsh, nb, K / nb)
       .select("doc_id", "band", "key")
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val index = s.read.parquet(s"$statePath/v=$prevV")
+    val standing = index.select("doc_id", "band", "key")
     val verdicts = graft.dedup.Dedup.screenBatch(
-      batch.select("doc_id"), bands, index, bsh, corpusSh)
+      batch.select("doc_id"), bands, standing, bsh, corpusSh)
       // consumed twice (ledger write + survivor fold); LAZY (r14): the
       // ledger write materializes the blocks, the fold reuses them
       .localCheckpoint(false)
-    // sizedForState (r15): the batch-proportional ledger and the folded
-    // index both derive from (and are bounded by a small multiple of)
-    // the previous version's bytes — size the writes so a KB-scale
-    // state is ONE file per version, not shuffle-width splinters
-    val prevP = new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")
-    sizedForState(verdicts.withColumn("batch", lit(batchId)),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
-    val survivors = verdicts.filter(!col("is_dup")).select("doc_id")
-    sizedForState(
-        index.unionByName(
-          bands.join(survivors, Seq("doc_id"), "left_semi")),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
-    // no version pruning during the run: every version must stay
-    // replayable while the stream is live, and the whole per-run dir is
-    // deleted in the driver's finally — 5 versions of a 4-rows-per-doc
-    // banding, not a growth surface
+    c.commit(batchId, Some(prev), VersionChain.Side("b",
+        verdicts.withColumn("batch", lit(batchId)))) {
+      val survivors = verdicts.filter(!col("is_dup")).select("doc_id")
+      val folded = standing
+        .unionByName(bands.join(survivors, Seq("doc_id"), "left_semi"))
+      retune match {
+        case None => folded
+        case Some(budget) if batchId == RetuneAfterBatch =>
+          // the fold feeds three consumers (monitor, roster, possibly
+          // the version write) — materialize once
+          val f = folded.localCheckpoint(true)
+          val (retuned, fired) = graft.dedup.Dedup.retuneIfNeeded(
+            corpusSh.join(f.select("doc_id").distinct(), Seq("doc_id"),
+              "left_semi"),
+            f, bands = 2, r = K / 2, budget = budget)
+          if (fired) retuned.withColumn("nb", lit(2))
+          else f.withColumn("nb", lit(nb))
+        case _ => folded.withColumn("nb", lit(nb))
+      }
+    }
   }
 
-  /** Deliberate mid-chain crash for the restart gate ([[
-    * qStreamIngestRestart]]): thrown by the ingest sink AFTER the
-    * designated batch's writes are fully committed (verdict ledger +
-    * index version, both with `_SUCCESS`) but BEFORE the runtime
-    * records the batch in the checkpoint commit log — exactly the torn
-    * state a real driver loss leaves behind, and the one the
-    * version-chain argument must survive. */
-  private[graft] final class InjectedCrash(msg: String)
-    extends RuntimeException(msg)
-
-  @annotation.tailrec
-  private def isInjected(t: Throwable): Boolean = t match {
-    case null => false
-    case _: InjectedCrash => true
-    case other => isInjected(other.getCause)
+  /** The dedup ingest chain: the base-corpus banding (everything outside
+    * the arriving slices) seeds v=0 — with the standing banding shape
+    * `nb` when `retune` is set — and [[applyIngestBatch]] folds each
+    * micro-batch. */
+  private[graft] def dedupChain(s: SparkSession, d: String,
+      retune: Option[Double] = None): VersionChain.Spec = {
+    graft.io.Tables.ensureSessionRegistered(s)
+    val src = docsSplit(s, d)
+    val corpusSh = graft.dedup.Dedup.corpusShingles(s, d)
+    VersionChain.Spec(if (retune.isEmpty) "ingest" else "retune", src,
+      c => {
+        val base = graft.dedup.Dedup.corpusBands(s, d)
+          .filter(!IngestSlices.map(m =>
+            pmod(col("doc_id"), lit(10L)) === m).reduce(_ || _))
+        c.seed(retune.fold(base)(_ =>
+          base.withColumn("nb", lit(graft.functions.TextHash.Bands))))
+      },
+      (c, batch, batchId) =>
+        applyIngestBatch(c, batch, batchId, corpusSh, retune))
   }
-
-  /** Drive one versioned-sink chain under the real micro-batch runtime
-    * (shared by BOTH ingest families): one file per micro-batch from
-    * `src`, `applyBatch` as the foreachBatch sink, resuming from
-    * whatever `ckpt` says is next (a fresh checkpoint starts at batch
-    * 0; a checkpoint whose last batch committed sink-side but not
-    * runtime-side REPLAYS that batch — the exactly-once case).
-    * `crashAfter`: kill the QUERY with an [[InjectedCrash]] immediately
-    * after that batchId's sink writes commit, deterministically
-    * producing the torn state above (no timing races — the gate
-    * controls exactly where the chain is cut). */
-  private[graft] def runVersionedStream(s: SparkSession, src: String,
-      ckpt: String, crashAfter: Option[Long] = None)(
-      applyBatch: (DataFrame, Long) => Unit): Unit = {
-    val schema = s.read.parquet(src).schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(src)
-    val q = stream.writeStream
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatch(batch, batchId)
-        if (crashAfter.contains(batchId))
-          throw new InjectedCrash(s"injected crash after batch $batchId")
-      }.start()
-    try q.processAllAvailable()
-    catch { case t: Throwable if crashAfter.nonEmpty && isInjected(t) => () }
-    finally q.stop()
-  }
-
-  /** The dedup ingest chain through [[runVersionedStream]]. */
-  private[graft] def runIngestChain(s: SparkSession, src: String,
-      state: String, verd: String, ckpt: String, corpusSh: DataFrame,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyIngestBatch(batch, batchId, state, verd, corpusSh))
 
   /** The committed verdict ledger across all [[IngestSlices]] batches —
-    * the registered result surface of both ingest gates. */
-  private def ingestLedger(s: SparkSession, verd: String): DataFrame = {
-    val fs = hadoopFs(s, verd)
-    val ledgers = IngestSlices.indices.map { i =>
-      val p = s"$verd/b=$i"
-      require(fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")),
-        s"ingest batch $i left no committed verdict ledger at $p")
-      s.read.parquet(p)
-    }
-    ledgers.reduce(_ unionByName _)
-      .select(col("batch"), col("doc_id"), col("best_base"),
-        col("best_jaccard"), col("is_dup"))
-      .orderBy("batch", "doc_id").localCheckpoint(true)
-  }
+    * the registered result surface of the dedup ingest gates. */
+  private def ingestLedger(c: VersionChain): DataFrame =
+    c.ledger(IngestSlices.size, col("batch"), col("doc_id"),
+      col("best_base"), col("best_jaccard"), col("is_dup"))
 
-  /** Streaming CONTINUOUS-INGEST dedup — the [[qDedupIndexUpdate3]]
-    * admit→fold chain graduated from driver-sequenced batch code to the
-    * actual micro-batch runtime: the four batch slices of the documents
-    * table arrive as a real `readStream` file stream (one slice per
-    * micro-batch, in order), each batch's [[applyIngestBatch]] screens
-    * it against the newest committed banding version and folds its
-    * survivors in, and the registered result is the full verdict LEDGER
-    * across all four batches. The DuckDB oracle recomputes the
-    * four-phase admission from scratch (phase-k eligibility = base +
-    * every earlier batch's non-dup survivors), so one dropped,
-    * duplicated, re-ordered, or mis-chained fold anywhere in the
-    * version chain diverges the hash — this is the gate that the
-    * CONTINUOUS path equals the from-scratch semantics under the real
-    * streaming engine, exactly-once versioning included.
-    *
-    * Scale posture: per batch, one directional [[graft.dedup.Dedup
-    * .screenBatch]] probe (|batch| × bucket-occupancy candidates) plus
-    * an append-shaped union write; state grows by survivors' bands
-    * only. The per-run state/checkpoint scratch is UUID-unique under
-    * [[scratchRoot]] and deleted in `finally`. */
   /** The from-scratch N-phase admission oracle BUILDER, shared by all
     * three dedup ingest gates (uninterrupted, crash-restart, retune):
     * exactly-once means the RESULT is independent of where the runtime
@@ -1532,188 +1378,53 @@ object StreamOps {
   /** The shared no-maintenance oracle (uninterrupted + crash-restart). */
   private val ingestOracleSql: String = ingestOracleSqlFor(None)
 
-  /** The base-corpus banding seed (everything outside the arriving
-    * slices) shared by both ingest gates. */
-  private def ingestBaseIndex(s: SparkSession, d: String): DataFrame =
-    graft.dedup.Dedup.corpusBands(s, d)
-      .filter(!IngestSlices.map(m =>
-        pmod(col("doc_id"), lit(10L)) === m).reduce(_ || _))
-
+  /** Streaming CONTINUOUS-INGEST dedup — the [[qDedupIndexUpdate3]]
+    * admit→fold chain graduated from driver-sequenced batch code to the
+    * actual micro-batch runtime: the four batch slices of the documents
+    * table arrive as a real `readStream` file stream (one slice per
+    * micro-batch, in order), each batch's [[applyIngestBatch]] screens
+    * it against the newest committed banding version and folds its
+    * survivors in, and the registered result is the full verdict LEDGER
+    * across all four batches. The DuckDB oracle recomputes the
+    * four-phase admission from scratch (phase-k eligibility = base +
+    * every earlier batch's non-dup survivors), so one dropped,
+    * duplicated, re-ordered, or mis-chained fold anywhere in the
+    * version chain diverges the hash — this is the gate that the
+    * CONTINUOUS path equals the from-scratch semantics under the real
+    * streaming engine, exactly-once versioning included.
+    *
+    * Scale posture: per batch, one directional [[graft.dedup.Dedup
+    * .screenBatch]] probe (|batch| × bucket-occupancy candidates) plus
+    * an append-shaped union write; state grows by survivors' bands
+    * only. */
   val qStreamDedupIngest: graft.queries.Q =
     graft.queries.Q("q_stream_dedup_ingest", ingestOracleSql) { (s, d) =>
-      graft.io.Tables.ensureSessionRegistered(s)
-      val src = docsSplit(s, d)
-      val corpusSh = graft.dedup.Dedup.corpusShingles(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_ingest_state_$runId"
-      val verd = s"$root/graft_ingest_verd_$runId"
-      val ckpt = s"$root/graft_ingest_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          ingestBaseIndex(s, d).write.mode("overwrite")
-            .parquet(s"$state/v=0")
-          runIngestChain(s, src, state, verd, ckpt, corpusSh)
-          ingestLedger(s, verd)
-        }
-      } finally for (p <- Seq(state, verd, ckpt)) deletePath(s, p)
+      VersionChain.run(s, dedupChain(s, d))(ingestLedger)
     }
 
   /** CRASH-RESTART exactly-once, demonstrated under the real runtime
     * (VERDICT r11 missing #1 / next #1): the ingest chain is KILLED
-    * mid-chain — deterministically, via [[InjectedCrash]] thrown right
-    * after batch 1's sink writes commit but before its checkpoint
-    * commit-log entry — and a FRESH StreamingQuery is started from the
-    * SAME checkpoint + state + ledger directories. The runtime replays
-    * batch 1 (offsets logged, commit missing — the at-least-once
-    * delivery the sink must absorb); the version chain makes the replay
-    * idempotent (batch N reads the newest committed v ≤ N, so the
-    * replay chains off v=1, never its own v=2 output, and overwrites
-    * v=2 and `b=1` with identical content); batches 2 and 3 then run
-    * once. The registered result is the final 4-batch ledger, gated by
-    * the SAME from-scratch oracle as the uninterrupted gate — the
-    * exactly-once claim IS that the cut is invisible in the result.
-    * Before restarting, the gate `require`s the torn state it claims to
-    * recover from: batch 1's ledger committed sink-side, batch 1 ABSENT
-    * from the checkpoint commit log, and the tail batches not yet run
+    * mid-chain — deterministically, via [[VersionChain.InjectedCrash]]
+    * thrown right after batch 1's sink writes commit but before its
+    * checkpoint commit-log entry — and a FRESH StreamingQuery is started
+    * from the SAME checkpoint + state + ledger directories (a two-leg
+    * [[VersionChain.run]], which `require`s the torn state between the
+    * legs: batch 1's version sink-committed, the tail unrun, batch 1
+    * ABSENT from the checkpoint commit log). The runtime replays batch 1
+    * (offsets logged, commit missing — the at-least-once delivery the
+    * sink must absorb); the version chain makes the replay idempotent
+    * (the replay chains off v=1, never its own v=2 output, and
+    * overwrites v=2 and `b=1` with identical content); batches 2 and 3
+    * then run once. The registered result is the final 4-batch ledger,
+    * gated by the SAME from-scratch oracle as the uninterrupted gate —
+    * the exactly-once claim IS that the cut is invisible in the result
     * (`StreamOpsSpec` additionally pins ledger + final index version
     * row-identity against an uninterrupted twin run). */
   val qStreamIngestRestart: graft.queries.Q =
     graft.queries.Q("q_stream_ingest_restart", ingestOracleSql) { (s, d) =>
-      graft.io.Tables.ensureSessionRegistered(s)
-      val src = docsSplit(s, d)
-      val corpusSh = graft.dedup.Dedup.corpusShingles(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_restart_state_$runId"
-      val verd = s"$root/graft_restart_verd_$runId"
-      val ckpt = s"$root/graft_restart_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          ingestBaseIndex(s, d).write.mode("overwrite")
-            .parquet(s"$state/v=0")
-          // leg 1: the chain dies right after batch 1 lands sink-side
-          runIngestChain(s, src, state, verd, ckpt, corpusSh,
-            crashAfter = Some(1L))
-          val fs = hadoopFs(s, verd)
-          def p(path: String) = new org.apache.hadoop.fs.Path(path)
-          require(fs.exists(p(s"$verd/b=1/_SUCCESS")),
-            "crash must land AFTER batch 1's sink commit")
-          require(!fs.exists(p(s"$verd/b=${IngestSlices.size - 1}")),
-            "crash must land mid-chain, before the tail batches")
-          require(!hadoopFs(s, ckpt).exists(p(s"$ckpt/commits/1")),
-            "batch 1 must be checkpoint-UNcommitted at the cut " +
-              "(sink-committed only) — the torn state under test")
-          // leg 2: a fresh query from the same checkpoint replays
-          // batch 1 and finishes the chain
-          runIngestChain(s, src, state, verd, ckpt, corpusSh)
-          ingestLedger(s, verd)
-        }
-      } finally for (p <- Seq(state, verd, ckpt)) deletePath(s, p)
+      VersionChain.run(s, dedupChain(s, d).copy(name = "restart"),
+        crashes = Seq(1L))(ingestLedger)
     }
-
-  /** Maintenance budget for the LIVE-STREAM retune gate: the size-biased
-    * mean bucket occupancy Σocc²/Σocc a band may reach before the
-    * between-batches maintenance check re-bands the index. The gate's
-    * default (1.0) is the strictest SLO — any co-located signature pair
-    * anywhere flags the move — chosen so the documents corpus's own
-    * statistics (it HAS near-dups, so some 4×4 bucket holds ≥ 2 docs)
-    * demand the swap and the gate exercises the full
-    * decision→swap→post-swap-screen path; the DECISION itself is still
-    * computed from the folded index in both engines, and
-    * `StreamOpsSpec` drives the opposite branch (budget high → no swap)
-    * to pin that the flag, not the schedule, is what acts. */
-  val StreamOccBudget: Double = graft.similarity.Similarity
-    .doubleKnob("GRAFT_STREAM_OCC_BUDGET", 1.0, 0.0, 1e9)
-
-  /** The micro-batch after whose fold the in-stream maintenance check
-    * runs (the swap, if flagged, lands in that batch's output version —
-    * see [[applyRetuneIngestBatch]] for why it must). */
-  private[graft] val RetuneAfterBatch = 1L
-
-  /** One admit→fold→MAINTAIN step of the retune-aware ingest sink: the
-    * [[applyIngestBatch]] contract plus two production concerns. (1)
-    * Index versions carry their banding SHAPE — a constant `nb` column
-    * (bands; rows per band = K/nb) — because after a retune the arriving
-    * batch must probe with bands projected at the INDEX's shape, not a
-    * compile-time constant; the probe reads `nb` from the version it
-    * screens against (1-row read of an RLE'd constant column). (2) On
-    * the maintenance batch, after the fold, the occupancy monitor runs
-    * over the folded index and [[graft.dedup.Dedup.retuneIfNeeded]]
-    * re-bands the accumulated state at 2×8 IFF any band is over
-    * `budget` — and the swapped index is what gets written as the
-    * batch's output version. The swap MUST live inside the batch's own
-    * version write (not a separate later version): batch N's replay
-    * after a crash re-reads v ≤ N and re-derives v=N+1 from scratch, so
-    * anything the maintenance did must be a deterministic function of
-    * the same inputs — fold, monitor, decision, re-band all recompute
-    * identically on replay, which is exactly how the crash-restart leg
-    * stays exactly-once THROUGH the swap (spec-pinned). Re-banding
-    * needs signatures, not just the standing band rows; the roster of
-    * admitted docs is the index's distinct doc_ids and `corpusSh`
-    * supplies their shingle sets (the signature store a production
-    * pipeline keeps alongside the banding). */
-  private[graft] def applyRetuneIngestBatch(batch: DataFrame, batchId: Long,
-      statePath: String, verdictsPath: String, corpusSh: DataFrame,
-      maintainAfter: Long = RetuneAfterBatch,
-      budget: Double = StreamOccBudget): Unit = {
-    val s = batch.sparkSession
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val K = graft.functions.TextHash.K
-    val bsh = graft.functions.TextHash
-      .addShingleHashes(batch, col("text")).select("doc_id", "hs")
-      // two consumers (bands + verify), one compute; LAZY (r14): the
-      // blocks materialize inside the ledger write's job instead of a
-      // dedicated per-batch barrier job
-      .localCheckpoint(false)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val index = s.read.parquet(s"$statePath/v=$prevV")
-    val nb = index.select("nb").head().getInt(0)
-    val bands = graft.dedup.Dedup.lshBandsWith(bsh, nb, K / nb)
-      .select("doc_id", "band", "key")
-    val verdicts = graft.dedup.Dedup.screenBatch(
-      batch.select("doc_id"), bands,
-      index.select("doc_id", "band", "key"), bsh, corpusSh)
-      // consumed twice (ledger write + survivor fold); LAZY (r14): the
-      // ledger write materializes the blocks, the fold reuses them
-      .localCheckpoint(false)
-    val prevP = new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")
-    sizedForState(verdicts.withColumn("batch", lit(batchId)),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
-    val survivors = verdicts.filter(!col("is_dup")).select("doc_id")
-    val foldedRaw = index.select("doc_id", "band", "key")
-      .unionByName(bands.join(survivors, Seq("doc_id"), "left_semi"))
-    val maintain = batchId == maintainAfter
-    // on the maintenance batch the fold feeds three consumers (monitor,
-    // roster, possibly the version write) — materialize once
-    val folded =
-      if (maintain) foldedRaw.localCheckpoint(true) else foldedRaw
-    val next =
-      if (maintain) {
-        val roster = folded.select("doc_id").distinct()
-        val (retuned, fired) = graft.dedup.Dedup.retuneIfNeeded(
-          corpusSh.join(roster, Seq("doc_id"), "left_semi"),
-          folded, bands = 2, r = K / 2, budget = budget)
-        if (fired) retuned.withColumn("nb", lit(2))
-        else folded.withColumn("nb", lit(nb))
-      } else folded.withColumn("nb", lit(nb))
-    sizedForState(next, fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
-  }
-
-  /** The retune-aware ingest chain through [[runVersionedStream]]. */
-  private[graft] def runRetuneChain(s: SparkSession, src: String,
-      state: String, verd: String, ckpt: String, corpusSh: DataFrame,
-      budget: Double = StreamOccBudget,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyRetuneIngestBatch(batch, batchId, state, verd, corpusSh,
-        RetuneAfterBatch, budget))
 
   /** The occupancy-triggered retune UNDER the live stream (VERDICT r12
     * missing #1 / next #2) — the last composition a production ingest
@@ -1738,23 +1449,8 @@ object StreamOps {
     graft.queries.Q("q_stream_retune_ingest",
       ingestOracleSqlFor(Some((RetuneAfterBatch.toInt, StreamOccBudget)))) {
       (s, d) =>
-        graft.io.Tables.ensureSessionRegistered(s)
-        val src = docsSplit(s, d)
-        val corpusSh = graft.dedup.Dedup.corpusShingles(s, d)
-        val runId = java.util.UUID.randomUUID()
-        val root = scratchRoot(s)
-        val state = s"$root/graft_retune_state_$runId"
-        val verd = s"$root/graft_retune_verd_$runId"
-        val ckpt = s"$root/graft_retune_ckpt_$runId"
-        try {
-          withStatePartitions(s) {
-            ingestBaseIndex(s, d)
-              .withColumn("nb", lit(graft.functions.TextHash.Bands))
-              .write.mode("overwrite").parquet(s"$state/v=0")
-            runRetuneChain(s, src, state, verd, ckpt, corpusSh)
-            ingestLedger(s, verd)
-          }
-        } finally for (p <- Seq(state, verd, ckpt)) deletePath(s, p)
+        VersionChain.run(s, dedupChain(s, d, Some(StreamOccBudget)))(
+          ingestLedger)
     }
 
   // ------------------------------------------------------------------
@@ -1765,56 +1461,39 @@ object StreamOps {
     * (the same two slices the batch-mode N-fold gate chains). */
   private[graft] val AnnIngestSlices: Seq[Int] = Seq(7, 3)
 
-  private val embSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Ordered 2-file split of the embeddings BATCH slices (base vectors
     * never stream — they are the seeded index), one file per
-    * [[AnnIngestSlices]] slice with strictly increasing mtimes. */
-  private[graft] def embSplit(s: SparkSession, d: String): String =
-    embSplitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      import org.apache.hadoop.fs.Path
-      val dir = s"${scratchRoot(s)}/graft_emb_split_" +
-        java.util.UUID.randomUUID()
-      val fs = hadoopFs(s, dir)
+    * [[AnnIngestSlices]] slice ([[orderedSplit]]). */
+  private def embSplit(s: SparkSession, d: String): String =
+    orderedSplit(s, d, "emb", "emb") {
       val vecs = graft.io.Tables.load(s, d, "embeddings")
         .select("vec_id", "embedding")
-      val t0 = System.currentTimeMillis()
-      AnnIngestSlices.zipWithIndex.foreach { case (m, k) =>
-        val tmp = s"$dir/__tmp"
-        vecs.filter(graft.similarity.Similarity.ivfBatchPredicate(s, m))
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val target = new Path(dir, f"emb_$k%02d.parquet")
-        fs.rename(part, target)
-        fs.delete(new Path(tmp), true)
-        fs.setTimes(target, t0 + k * 60000L, -1)
-      }
-      deleteAtExit(s, dir)
-      dir
-    })
+      AnnIngestSlices.map(m =>
+        vecs.filter(graft.similarity.Similarity.ivfBatchPredicate(s, m)))
+    }
 
   /** One IVF fold step of the streaming ANN ingest sink: assign the
     * streamed micro-batch against the FIXED coarse quantizer and union
-    * its cell rows into the next index version. Exactly-once by the
-    * same seeded version chain as [[applyIngestBatch]] (base cells at
-    * v=0; batch N reads newest committed v ≤ N, writes v=N+1). */
-  private[graft] def applyAnnIngestBatch(batch: DataFrame, batchId: Long,
-      statePath: String, anchors: DataFrame): Unit = {
-    val s = batch.sparkSession
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
+    * its cell rows into the next index version (a seeded
+    * [[VersionChain]], base cells at v=0). */
+  private[graft] def applyAnnIngestBatch(c: VersionChain, batch: DataFrame,
+      batchId: Long, anchors: DataFrame): Unit = {
     val cells = graft.similarity.Similarity.assignCellsOf(batch, anchors)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    sizedForState(
-        s.read.parquet(s"$statePath/v=$prevV").unionByName(cells),
-        fs, Seq(new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
+    val prev = c.base(batchId)
+    c.commit(batchId, Some(prev))(c.read(prev).unionByName(cells))
+  }
+
+  /** The ANN ingest chain: base cells at v=0, [[applyAnnIngestBatch]]
+    * per batch against the fixed anchors. */
+  private[graft] def annChain(s: SparkSession,
+      d: String): VersionChain.Spec = {
+    graft.io.Tables.ensureSessionRegistered(s)
+    val sim = graft.similarity.Similarity
+    val src = embSplit(s, d)
+    val anchors = sim.ivfAnchors(s, d).localCheckpoint(true)
+    VersionChain.Spec("annidx", src,
+      _.seed(sim.ivfBaseCells(s, d, AnnIngestSlices)),
+      (c, batch, batchId) => applyAnnIngestBatch(c, batch, batchId, anchors))
   }
 
   /** Streaming CONTINUOUS-INGEST for the IVF index — the embedding-side
@@ -1835,43 +1514,24 @@ object StreamOps {
     *
     * Scale posture: per batch, |batch| × Cells broadcast-NLJ assignment
     * (the constant-width append cost) plus an append-shaped union
-    * write; per-run scratch is UUID-unique under [[scratchRoot]] and
-    * deleted in `finally`. */
+    * write. */
   val qStreamAnnIngest: graft.queries.Q = graft.queries.Q(
     "q_stream_ann_ingest",
     graft.similarity.Similarity.qAnnIndexUpdate3.oracle.getOrElse(
       sys.error("q_ann_index_update3 lost its oracle"))) { (s, d) =>
-    graft.io.Tables.ensureSessionRegistered(s)
     val sim = graft.similarity.Similarity
-    val src = embSplit(s, d)
-    val anchors = sim.ivfAnchors(s, d).localCheckpoint(true)
-    val runId = java.util.UUID.randomUUID()
-    val root = scratchRoot(s)
-    val state = s"$root/graft_annidx_state_$runId"
-    val ckpt = s"$root/graft_annidx_ckpt_$runId"
-    try {
-      withStatePartitions(s) {
-        sim.ivfBaseCells(s, d, AnnIngestSlices)
-          .write.mode("overwrite").parquet(s"$state/v=0")
-        runVersionedStream(s, src, ckpt)((batch, batchId) =>
-          applyAnnIngestBatch(batch, batchId, state, anchors))
-        val fs = hadoopFs(s, state)
-        val finalV = committedVersions(fs,
-          new org.apache.hadoop.fs.Path(state)).sorted.last
-        require(finalV == AnnIngestSlices.size.toLong,
-          s"expected ${AnnIngestSlices.size} folds, newest version $finalV")
-        val folded = s.read.parquet(s"$state/v=$finalV")
-        sim.ivfServe(s, d, folded)
-          .withColumn("is_new1", sim.ivfIsNewCol(AnnIngestSlices.head))
-          .withColumn("is_new2", sim.ivfIsNewCol(AnnIngestSlices(1)))
-          .orderBy("query_id", "rnk").localCheckpoint(true)
-      }
-    } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+    VersionChain.run(s, annChain(s, d)) { c =>
+      sim.ivfServe(s, d, c.read(c.newest))
+        .withColumn("is_new1", sim.ivfIsNewCol(AnnIngestSlices.head))
+        .withColumn("is_new2", sim.ivfIsNewCol(AnnIngestSlices(1)))
+        .orderBy("query_id", "rnk").localCheckpoint(true)
+    }
   }
 
   // ------------------------------------------------------------------
-  // Streaming ANN RETRAIN: the decision-gated quantizer rebuild under
-  // the real runtime (the ANN symmetric half of q_stream_retune_ingest)
+  // Streaming ANN MAINTENANCE: the decision-gated quantizer rebuilds
+  // under the real runtime — retrain on cell balance, resize on the
+  // count-derived k, and the resize that recalibrates the probe width
   // ------------------------------------------------------------------
 
   /** Imbalance budget for the LIVE-STREAM retrain gate — the ANN twin
@@ -1887,76 +1547,158 @@ object StreamOps {
   /** The micro-batch after whose fold the ANN maintenance check runs. */
   private[graft] val RetrainAfterBatch = 0L
 
-  private def readQuant(s: SparkSession,
-      path: String): Seq[(Long, Seq[Long])] =
-    s.read.parquet(path).collect()
+  /** Occupancy target for the STREAMING resize chain's derived
+    * quantizer size (k = ⌈n_vecs/occ⌉, [[graft.similarity.Similarity
+    * .derivedCellsFor]]): its own knob, not `GRAFT_IVF_TARGET_OCC`,
+    * because the chain's gate needs the boundary crossing to land
+    * MID-CHAIN on the gated corpora — at 64, the sf0.01 chain grows
+    * k 7→8 on the batch-7 fold (404→452 vecs) and sf0.1 grows 26→29
+    * (1604→1802), so the decision→action wiring is exercised at both
+    * scales with genuinely different derived sizes. */
+  val StreamTargetOcc: Int = graft.similarity.Similarity
+    .intKnob("GRAFT_STREAM_TARGET_OCC", 64, 1, 1 << 30)
+
+  /** The micro-batch after whose fold the SIZE check consumes the
+    * derivation (the scheduled maintenance slot — the family's
+    * [[RetrainAfterBatch]] discipline). */
+  private[graft] val ResizeAfterBatch = 0L
+
+  private type Quant = Seq[(Long, Seq[Long])]
+
+  private def readQuant(c: VersionChain, v: Long): Quant =
+    c.read(v, "q").collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq.sortBy(_._1)
 
-  /** One fold→MAINTAIN step of the retrain-aware ANN ingest sink: the
-    * state is the Lloyd-quantizer world end to end — each version
-    * carries its cell assignment WITH the int8 codes (`v=N`: vec_id, c,
-    * cl — codes ride along so a retrain can re-train from state alone)
-    * and the quantizer that produced it (`q=N`: cl, m — written FIRST,
-    * so a committed `v=N` implies its quantizer is readable). The
-    * arriving batch codes its own vectors (per-vector max-abs scale ⇒
-    * batching-invariant), assigns them against the newest committed
-    * version's quantizer, and folds. On the maintenance batch, the
-    * cell-balance monitor measures the folded assignment and IFF
-    * imbalance exceeds `budget` the quantizer RETRAINS — 3 Lloyd rounds
-    * over the accumulated codes (seed = codes of the accumulated set's
-    * 8 smallest vec_ids, [[graft.similarity.Similarity.lloydSeed]]) —
-    * and the whole accumulated state is re-assigned; later batches
-    * assign against the retrained centroids they read from the version
-    * chain. The swap lives inside the batch's own version write, so a
-    * crash replay re-derives fold→monitor→decision→retrain→re-assign
-    * deterministically (integer Lloyd — no float reduction order). */
-  private[graft] def applyAnnRetrainBatch(batch: DataFrame, batchId: Long,
-      statePath: String, maintainAfter: Long = RetrainAfterBatch,
-      budget: Double = StreamCellBudget): Unit = {
+  /** The 1-row width version `p=N` of the calibrated chain. */
+  private def readWidth(c: VersionChain, v: Long): Int =
+    c.read(v, "p").head().getLong(0).toInt
+
+  /** One fold→MAINTAIN step of the Lloyd-quantized ANN chains — retrain,
+    * resize and calibrate differ only in the decision passed in. Each
+    * version carries its cell assignment WITH the int8 codes (`v=N`:
+    * vec_id, c, cl — codes ride along so a retrain can re-train from
+    * state alone), the quantizer that produced it (`q=N`: cl, m) and,
+    * with `calibrate`, the probe width (`p=N`) — side artifacts before
+    * the `v=` marker ([[VersionChain]]). The arriving batch codes its own
+    * vectors (per-vector max-abs scale ⇒ batching-invariant), assigns
+    * them against the newest committed quantizer, and folds. On the
+    * maintenance batch `retrainSeed` inspects the fold and the current
+    * quantizer and returns the seed to retrain from IFF the chain must
+    * retrain: the quantizer then RETRAINS — 3 integer-Lloyd rounds over
+    * the accumulated codes — the whole accumulated state re-assigns, and
+    * with `calibrate` the width is recalibrated against the NEW centroids
+    * (the need-ranks are ranks against the new centroid set; carrying the
+    * old width across a re-size would be a category error). Otherwise
+    * quantizer and width carry forward. The swap lives inside the batch's
+    * own version write, and integer Lloyd has no float reduction order,
+    * so a crash replay re-derives fold→decision→retrain→re-assign→
+    * calibrate identically. */
+  private def applyLloydBatch(c: VersionChain, batch: DataFrame,
+      batchId: Long, calibrate: Boolean, maintainAfter: Long)(
+      retrainSeed: (DataFrame, Quant) => Option[Quant]): Unit = {
     val s = batch.sparkSession
+    import s.implicits._
     val sim = graft.similarity.Similarity
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val quant = readQuant(s, s"$statePath/q=$prevV")
+    val prev = c.base(batchId)
+    val quant = readQuant(c, prev)
+    val prevW = if (calibrate) Some(readWidth(c, prev)) else None
     val bcodes = sim.int8CodesOf(
       batch.select(col("vec_id"), col("embedding").cast("array<double>")
         .as("v")))
-    val folded = s.read.parquet(s"$statePath/v=$prevV")
-      .select("vec_id", "c", "cl")
-      .unionByName(sim.lloydAssign(bcodes, quant)
+    val folded = c.read(prev).select("vec_id", "c", "cl")
+      .unionByName(sim.lloydAssignScaled(bcodes, quant)
         .select("vec_id", "c", "cl"))
-      .localCheckpoint(true) // monitor + (maybe) retrain + write
-    val (cellsOut, quantOut) =
-      if (batchId == maintainAfter) {
-        val fired = sim.cellStats(folded.select(col("cl").as("cell")),
-            "fold", budget)
-          .head().getBoolean(7)
-        if (fired) {
-          val cents = sim.lloydCentroids(folded.select("vec_id", "c"),
-            sim.LloydK, rounds = 3)
-          (sim.lloydAssign(folded.select("vec_id", "c"), cents)
-            .select("vec_id", "c", "cl"), cents)
-        } else (folded, quant)
-      } else (folded, quant)
-    import s.implicits._
-    sizedByRows(quantOut.toDF("cl", "m"), quantOut.size.toLong)
-      .write.mode("overwrite").parquet(s"$statePath/q=${batchId + 1}")
-    sizedForState(cellsOut, fs,
-        Seq(new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
+      .localCheckpoint(true) // decision + (maybe) retrain + write
+    val retrained =
+      (if (batchId == maintainAfter) retrainSeed(folded, quant) else None)
+        .map { seed =>
+          val codes = folded.select("vec_id", "c")
+          val cents = sim.lloydCentroidsSeeded(codes, seed, rounds = 3)
+          val re = sim.lloydAssignScaled(codes, cents)
+            .select("vec_id", "c", "cl")
+          (if (calibrate) re.localCheckpoint(true) else re, cents)
+        }
+    val (cells, cents) = retrained.getOrElse((folded, quant))
+    val width = prevW.map(w =>
+      if (retrained.isEmpty) w else sim.calibratedLloydWidth(cells, cents))
+    val sides = VersionChain.Side("q", cents.toDF("cl", "m"),
+        Some(cents.size.toLong)) +:
+      width.toSeq.map(w =>
+        VersionChain.Side("p", Seq(w.toLong).toDF("w"), Some(1L)))
+    c.commit(batchId, Some(prev), sides: _*)(cells)
   }
 
-  /** The retrain-aware ANN chain through [[runVersionedStream]]. */
-  private[graft] def runAnnRetrainChain(s: SparkSession, src: String,
-      state: String, ckpt: String, budget: Double = StreamCellBudget,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyAnnRetrainBatch(batch, batchId, state, RetrainAfterBatch,
-        budget))
+  /** A Lloyd-quantized ANN chain: the base codes (everything outside
+    * the arriving slices) seed q=0 with `seedOf`'s quantizer, v=0 with
+    * the assignment under it and, with `calibrate`, p=0 with the seed
+    * calibration — a store is never width-less; [[applyLloydBatch]]
+    * with `retrainSeed` per batch. */
+  private def lloydChain(s: SparkSession, d: String, name: String,
+      calibrate: Boolean, maintainAfter: Long)(seedOf: DataFrame => Quant)(
+      retrainSeed: (DataFrame, Quant) => Option[Quant]): VersionChain.Spec = {
+    graft.io.Tables.ensureSessionRegistered(s)
+    val sim = graft.similarity.Similarity
+    VersionChain.Spec(name, embSplit(s, d), c => {
+      import s.implicits._
+      val base = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
+        .localCheckpoint(true) // seed quantizer + assignment (+ width)
+      val seed = seedOf(base)
+      c.seed(seed.toDF("cl", "m"), "q")
+      val assigned = sim.lloydAssignScaled(base, seed)
+        .select("vec_id", "c", "cl")
+      if (calibrate) {
+        val a = assigned.localCheckpoint(true) // seed width + v=0 write
+        c.seed(Seq(sim.calibratedLloydWidth(a, seed).toLong).toDF("w"), "p")
+        c.seed(a)
+      } else c.seed(assigned)
+    }, (c, batch, batchId) =>
+      applyLloydBatch(c, batch, batchId, calibrate, maintainAfter)(
+        retrainSeed))
+  }
+
+  /** The RETRAIN chain: seed quantizer = the codes of the base's
+    * [[graft.similarity.Similarity.LloydK]] smallest vec_ids
+    * ([[graft.similarity.Similarity.lloydSeed]]); after batch
+    * [[RetrainAfterBatch]]'s fold the cell-balance monitor measures the
+    * folded assignment and IFF imbalance exceeds `budget` the quantizer
+    * retrains at the same k, seeded the same way from the fold. */
+  private[graft] def retrainChain(s: SparkSession, d: String,
+      budget: Double = StreamCellBudget): VersionChain.Spec = {
+    val sim = graft.similarity.Similarity
+    lloydChain(s, d, "retrain", calibrate = false, RetrainAfterBatch)(
+      sim.lloydSeed(_, sim.LloydK)) { (folded, _) =>
+      val fired = sim.cellStats(folded.select(col("cl").as("cell")),
+          "fold", budget)
+        .head().getBoolean(7)
+      if (fired) Some(sim.lloydSeed(folded.select("vec_id", "c"), sim.LloydK))
+      else None
+    }
+  }
+
+  /** The RESIZE chain (and, with `calibrate`, the CALIBRATE chain): the
+    * seed quantizer is sized k0 = ⌈n_base/occ⌉ from the base count
+    * ([[graft.similarity.Similarity.derivedCellsFor]]); after batch
+    * [[ResizeAfterBatch]]'s fold, k_next = ⌈n_folded/occ⌉ is re-derived
+    * from the folded state's own count (the `q_ann_cells_update`
+    * arithmetic, consumed instead of merely reported), and IFF it
+    * exceeds the current quantizer's size — the `grew` flag — the
+    * quantizer retrains at k_next, seeded from the fold's k_next smallest
+    * vec_ids. The current size needs no side-channel: it IS the row
+    * count of the newest committed `q` version. */
+  private[graft] def resizeChain(s: SparkSession, d: String,
+      occ: Int = StreamTargetOcc,
+      calibrate: Boolean = false): VersionChain.Spec = {
+    val sim = graft.similarity.Similarity
+    lloydChain(s, d, if (calibrate) "calibrate" else "resize", calibrate,
+      ResizeAfterBatch)(base =>
+      sim.lloydSeedN(base, sim.derivedCellsFor(base.count(), occ))) {
+      (folded, quant) =>
+        val kNext = sim.derivedCellsFor(folded.count(), occ)
+        if (kNext > quant.size)
+          Some(sim.lloydSeedN(folded.select("vec_id", "c"), kNext))
+        else None
+    }
+  }
 
   /** Two-update (3-round) integer-Lloyd CTE chain over training CTE
     * `ct` seeded from CTE `seed` (cl, m): emits a1/s1/cent1/a2/s2/cent2
@@ -2109,120 +1851,12 @@ object StreamOps {
   val qStreamRetrainIngest: graft.queries.Q =
     graft.queries.Q("q_stream_retrain_ingest",
       annRetrainOracleSql(StreamCellBudget)) { (s, d) =>
-      graft.io.Tables.ensureSessionRegistered(s)
-      val sim = graft.similarity.Similarity
-      val src = embSplit(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_retrain_state_$runId"
-      val ckpt = s"$root/graft_retrain_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          import s.implicits._
-          val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
-            .localCheckpoint(true) // seed quantizer + seed assignment
-          val seed = sim.lloydSeed(baseCodes, sim.LloydK)
-          seed.toDF("cl", "m")
-            .write.mode("overwrite").parquet(s"$state/q=0")
-          sim.lloydAssign(baseCodes, seed).select("vec_id", "c", "cl")
-            .write.mode("overwrite").parquet(s"$state/v=0")
-          runAnnRetrainChain(s, src, state, ckpt)
-          val fs = hadoopFs(s, state)
-          val finalV = committedVersions(fs,
-            new org.apache.hadoop.fs.Path(state)).sorted.last
-          require(finalV == AnnIngestSlices.size.toLong,
-            s"expected ${AnnIngestSlices.size} folds, newest $finalV")
-          sim.annRetrainServe(s, d,
-            s.read.parquet(s"$state/v=$finalV"),
-            readQuant(s, s"$state/q=$finalV"))
-            .orderBy("query_id", "rnk").localCheckpoint(true)
-        }
-      } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+      VersionChain.run(s, retrainChain(s, d)) { c =>
+        graft.similarity.Similarity.annRetrainServe(s, d,
+          c.read(c.newest), readQuant(c, c.newest))
+          .orderBy("query_id", "rnk").localCheckpoint(true)
+      }
     }
-
-  // ------------------------------------------------------------------
-  // Streaming ANN RESIZE: the derived-k quantizer rebuild under the
-  // real runtime — the chain that CONSUMES q_ann_cells_update's `grew`
-  // signal (VERDICT r13 next #2)
-  // ------------------------------------------------------------------
-
-  /** Occupancy target for the STREAMING resize chain's derived
-    * quantizer size (k = ⌈n_vecs/occ⌉, [[graft.similarity.Similarity
-    * .derivedCellsFor]]): its own knob, not `GRAFT_IVF_TARGET_OCC`,
-    * because the chain's gate needs the boundary crossing to land
-    * MID-CHAIN on the gated corpora — at 64, the sf0.01 chain grows
-    * k 7→8 on the batch-7 fold (404→452 vecs) and sf0.1 grows 26→29
-    * (1604→1802), so the decision→action wiring is exercised at both
-    * scales with genuinely different derived sizes. */
-  val StreamTargetOcc: Int = graft.similarity.Similarity
-    .intKnob("GRAFT_STREAM_TARGET_OCC", 64, 1, 1 << 30)
-
-  /** The micro-batch after whose fold the SIZE check consumes the
-    * derivation (the scheduled maintenance slot — the family's
-    * [[RetrainAfterBatch]] discipline). */
-  private[graft] val ResizeAfterBatch = 0L
-
-  /** One fold→RESIZE step of the size-aware ANN ingest sink — the
-    * state contract of [[applyAnnRetrainBatch]] (versions carry codes +
-    * assignment, `q=N` before `v=N`, swap inside the batch's own
-    * version write ⇒ replay-deterministic) with the maintenance
-    * decision changed from cell BALANCE at fixed k to SIZE at derived
-    * k: after the fold, k_next = ⌈n_folded/occ⌉ is re-derived from the
-    * folded state's own count (the `q_ann_cells_update` arithmetic,
-    * consumed instead of merely reported), and IFF it exceeds the
-    * current quantizer's size — the `grew` flag — the quantizer
-    * RETRAINS at k_next (3 integer-Lloyd rounds over the accumulated
-    * codes, seed = the folded set's k_next smallest vec_ids) and the
-    * whole accumulated state re-assigns. The current size needs no
-    * side-channel: it IS the row count of the newest committed `q`
-    * version, so a crash replay re-derives count→k→grew→retrain from
-    * the same inputs. */
-  private[graft] def applyAnnResizeBatch(batch: DataFrame, batchId: Long,
-      statePath: String, maintainAfter: Long = ResizeAfterBatch,
-      occ: Int = StreamTargetOcc): Unit = {
-    val s = batch.sparkSession
-    val sim = graft.similarity.Similarity
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val quant = readQuant(s, s"$statePath/q=$prevV")
-    val bcodes = sim.int8CodesOf(
-      batch.select(col("vec_id"), col("embedding").cast("array<double>")
-        .as("v")))
-    val folded = s.read.parquet(s"$statePath/v=$prevV")
-      .select("vec_id", "c", "cl")
-      .unionByName(sim.lloydAssignScaled(bcodes, quant)
-        .select("vec_id", "c", "cl"))
-      .localCheckpoint(true) // count + (maybe) retrain + write
-    val (cellsOut, quantOut) =
-      if (batchId == maintainAfter) {
-        val kNext = sim.derivedCellsFor(folded.count(), occ)
-        val grew = kNext > quant.size
-        if (grew) {
-          val codes = folded.select("vec_id", "c")
-          val cents = sim.lloydCentroidsSeeded(codes,
-            sim.lloydSeedN(codes, kNext), rounds = 3)
-          (sim.lloydAssignScaled(codes, cents)
-            .select("vec_id", "c", "cl"), cents)
-        } else (folded, quant)
-      } else (folded, quant)
-    import s.implicits._
-    sizedByRows(quantOut.toDF("cl", "m"), quantOut.size.toLong)
-      .write.mode("overwrite").parquet(s"$statePath/q=${batchId + 1}")
-    sizedForState(cellsOut, fs,
-        Seq(new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
-  }
-
-  /** The size-aware ANN chain through [[runVersionedStream]]. */
-  private[graft] def runAnnResizeChain(s: SparkSession, src: String,
-      state: String, ckpt: String, occ: Int = StreamTargetOcc,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyAnnResizeBatch(batch, batchId, state, ResizeAfterBatch, occ))
 
   /** From-scratch VALUE-GATED oracle for [[qStreamResizeIngest]]: both
     * derived sizes are recomputed from the slice counts (the
@@ -2292,114 +1926,14 @@ object StreamOps {
   val qStreamResizeIngest: graft.queries.Q =
     graft.queries.Q("q_stream_resize_ingest",
       annResizeOracleSql(StreamTargetOcc)) { (s, d) =>
-      graft.io.Tables.ensureSessionRegistered(s)
-      val sim = graft.similarity.Similarity
-      val src = embSplit(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_resize_state_$runId"
-      val ckpt = s"$root/graft_resize_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          import s.implicits._
-          val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
-            .localCheckpoint(true) // seed sizing + seed assignment
-          val k0 = sim.derivedCellsFor(baseCodes.count(), StreamTargetOcc)
-          val seed = sim.lloydSeedN(baseCodes, k0)
-          seed.toDF("cl", "m")
-            .write.mode("overwrite").parquet(s"$state/q=0")
-          sim.lloydAssignScaled(baseCodes, seed)
-            .select("vec_id", "c", "cl")
-            .write.mode("overwrite").parquet(s"$state/v=0")
-          runAnnResizeChain(s, src, state, ckpt)
-          val fs = hadoopFs(s, state)
-          val finalV = committedVersions(fs,
-            new org.apache.hadoop.fs.Path(state)).sorted.last
-          require(finalV == AnnIngestSlices.size.toLong,
-            s"expected ${AnnIngestSlices.size} folds, newest $finalV")
-          val quant = readQuant(s, s"$state/q=$finalV")
-          sim.annRetrainServe(s, d,
-            s.read.parquet(s"$state/v=$finalV"), quant)
-            .withColumn("quant_k", lit(quant.size.toLong))
-            .orderBy("query_id", "rnk").localCheckpoint(true)
-        }
-      } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+      VersionChain.run(s, resizeChain(s, d)) { c =>
+        val quant = readQuant(c, c.newest)
+        graft.similarity.Similarity.annRetrainServe(s, d,
+          c.read(c.newest), quant)
+          .withColumn("quant_k", lit(quant.size.toLong))
+          .orderBy("query_id", "rnk").localCheckpoint(true)
+      }
     }
-
-  // ------------------------------------------------------------------
-  // Streaming PROBE CALIBRATION: the derived nprobe rides the version
-  // chain — after the derived-k rebuild, the SAME maintenance batch
-  // recalibrates the probe width from the state's own codes, and the
-  // serve probes at the carried width (closing the knob pair under the
-  // live runtime: cells sized by count, width sized by cluster scale)
-  // ------------------------------------------------------------------
-
-  /** The 1-row width version `p=N` of the calibrated chain. */
-  private def readWidth(s: SparkSession, path: String): Int =
-    s.read.parquet(path).head().getLong(0).toInt
-
-  /** One fold→resize→RECALIBRATE step: [[applyAnnResizeBatch]]'s state
-    * contract extended with a probe-width version — `q=N` (centroids),
-    * then `p=N` (the 1-row calibrated width), then `v=N` (assignment,
-    * the commit marker) — so a crash replay re-derives
-    * count→k→grew→retrain→calibrate from the same inputs. The
-    * maintenance decision and the calibration are ONE batch: a store
-    * that re-sizes its quantizer must re-derive the probe width too
-    * (the need-ranks are ranks against the NEW centroid set; carrying
-    * the old width across a re-size would be a category error the
-    * version chain makes unrepresentable). Non-maintenance batches and
-    * the no-grow branch carry the previous width forward. */
-  private[graft] def applyAnnCalibrateBatch(batch: DataFrame,
-      batchId: Long, statePath: String,
-      maintainAfter: Long = ResizeAfterBatch,
-      occ: Int = StreamTargetOcc): Unit = {
-    val s = batch.sparkSession
-    val sim = graft.similarity.Similarity
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val quant = readQuant(s, s"$statePath/q=$prevV")
-    val prevW = readWidth(s, s"$statePath/p=$prevV")
-    val bcodes = sim.int8CodesOf(
-      batch.select(col("vec_id"), col("embedding").cast("array<double>")
-        .as("v")))
-    val folded = s.read.parquet(s"$statePath/v=$prevV")
-      .select("vec_id", "c", "cl")
-      .unionByName(sim.lloydAssignScaled(bcodes, quant)
-        .select("vec_id", "c", "cl"))
-      .localCheckpoint(true) // count + (maybe) retrain + write
-    val (cellsOut, quantOut, widthOut) =
-      if (batchId == maintainAfter) {
-        val kNext = sim.derivedCellsFor(folded.count(), occ)
-        if (kNext > quant.size) {
-          val codes = folded.select("vec_id", "c")
-          val cents = sim.lloydCentroidsSeeded(codes,
-            sim.lloydSeedN(codes, kNext), rounds = 3)
-          val re = sim.lloydAssignScaled(codes, cents)
-            .select("vec_id", "c", "cl")
-            .localCheckpoint(true) // calibrate + write
-          (re, cents, sim.calibratedLloydWidth(re, cents))
-        } else (folded, quant, prevW)
-      } else (folded, quant, prevW)
-    import s.implicits._
-    sizedByRows(quantOut.toDF("cl", "m"), quantOut.size.toLong)
-      .write.mode("overwrite").parquet(s"$statePath/q=${batchId + 1}")
-    sizedByRows(Seq(widthOut.toLong).toDF("w"), 1L)
-      .write.mode("overwrite").parquet(s"$statePath/p=${batchId + 1}")
-    sizedForState(cellsOut, fs,
-        Seq(new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
-  }
-
-  /** The calibrated chain through [[runVersionedStream]]. */
-  private[graft] def runAnnCalibrateChain(s: SparkSession, src: String,
-      state: String, ckpt: String, occ: Int = StreamTargetOcc,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyAnnCalibrateBatch(batch, batchId, state, ResizeAfterBatch, occ))
 
   /** Calibration CTE block over corpus CTE `x` (vec_id, c) and
     * centroid CTE `c0` (cl, m), prefixed to stay unique: `<p>tr` = the
@@ -2507,44 +2041,16 @@ object StreamOps {
   val qStreamCalibrateIngest: graft.queries.Q =
     graft.queries.Q("q_stream_calibrate_ingest",
       annCalibrateOracleSql(StreamTargetOcc)) { (s, d) =>
-      graft.io.Tables.ensureSessionRegistered(s)
-      val sim = graft.similarity.Similarity
-      val src = embSplit(s, d)
-      val runId = java.util.UUID.randomUUID()
-      val root = scratchRoot(s)
-      val state = s"$root/graft_calibrate_state_$runId"
-      val ckpt = s"$root/graft_calibrate_ckpt_$runId"
-      try {
-        withStatePartitions(s) {
-          import s.implicits._
-          val baseCodes = sim.annRetrainBaseCodes(s, d, AnnIngestSlices)
-            .localCheckpoint(true) // seed sizing + assignment + width
-          val k0 = sim.derivedCellsFor(baseCodes.count(), StreamTargetOcc)
-          val seed = sim.lloydSeedN(baseCodes, k0)
-          seed.toDF("cl", "m")
-            .write.mode("overwrite").parquet(s"$state/q=0")
-          val baseAssigned = sim.lloydAssignScaled(baseCodes, seed)
-            .select("vec_id", "c", "cl")
-            .localCheckpoint(true) // seed calibration + v=0 write
-          val w0 = sim.calibratedLloydWidth(baseAssigned, seed)
-          Seq(w0.toLong).toDF("w")
-            .write.mode("overwrite").parquet(s"$state/p=0")
-          baseAssigned.write.mode("overwrite").parquet(s"$state/v=0")
-          runAnnCalibrateChain(s, src, state, ckpt)
-          val fs = hadoopFs(s, state)
-          val finalV = committedVersions(fs,
-            new org.apache.hadoop.fs.Path(state)).sorted.last
-          require(finalV == AnnIngestSlices.size.toLong,
-            s"expected ${AnnIngestSlices.size} folds, newest $finalV")
-          val quant = readQuant(s, s"$state/q=$finalV")
-          val w = readWidth(s, s"$state/p=$finalV")
-          sim.annRetrainServe(s, d,
-            s.read.parquet(s"$state/v=$finalV"), quant, probeW = w)
-            .withColumn("quant_k", lit(quant.size.toLong))
-            .withColumn("nprobe", lit(w.toLong))
-            .orderBy("query_id", "rnk").localCheckpoint(true)
-        }
-      } finally for (p <- Seq(state, ckpt)) deletePath(s, p)
+      VersionChain.run(s, resizeChain(s, d, calibrate = true)) { c =>
+        val v = c.newest
+        val quant = readQuant(c, v)
+        val w = readWidth(c, v)
+        graft.similarity.Similarity.annRetrainServe(s, d,
+          c.read(v), quant, probeW = w)
+          .withColumn("quant_k", lit(quant.size.toLong))
+          .withColumn("nprobe", lit(w.toLong))
+          .orderBy("query_id", "rnk").localCheckpoint(true)
+      }
     }
 
   // ------------------------------------------------------------------
@@ -2558,37 +2064,14 @@ object StreamOps {
     * (q_image_index_update) phases. */
   private[graft] val ImgIngestSlices: Seq[Long] = Seq(4L, 14L)
 
-  private val imgSplitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Ordered 2-file split of the variant-doc slices (doc_id, text) —
-    * one file per [[ImgIngestSlices]] slice with strictly increasing
-    * mtimes, so `maxFilesPerTrigger=1` delivers them as ordered
-    * micro-batches. */
-  private[graft] def imgSplit(s: SparkSession, d: String): String =
-    imgSplitCache.computeIfAbsent(s"${scratchRoot(s)}|$d", _ => {
-      import org.apache.hadoop.fs.Path
-      val dir = s"${scratchRoot(s)}/graft_img_split_" +
-        java.util.UUID.randomUUID()
-      val fs = hadoopFs(s, dir)
+  /** Ordered 2-file split of the variant-doc slices (doc_id, text), one
+    * file per [[ImgIngestSlices]] slice ([[orderedSplit]]). */
+  private def imgSplit(s: SparkSession, d: String): String =
+    orderedSplit(s, d, "img", "imgs") {
       val docs = graft.io.Tables.load(s, d, "documents")
         .select("doc_id", "text")
-      val t0 = System.currentTimeMillis()
-      ImgIngestSlices.zipWithIndex.foreach { case (m, k) =>
-        val tmp = s"$dir/__tmp"
-        docs.filter(pmod(col("doc_id"), lit(20L)) === m)
-          .coalesce(1).write.mode("overwrite").parquet(tmp)
-        val part = fs.listStatus(new Path(tmp)).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
-          .getOrElse(sys.error(s"no part file written under $tmp"))
-        val target = new Path(dir, f"imgs_$k%02d.parquet")
-        fs.rename(part, target)
-        fs.delete(new Path(tmp), true)
-        fs.setTimes(target, t0 + k * 60000L, -1)
-      }
-      deleteAtExit(s, dir)
-      dir
-    })
+      ImgIngestSlices.map(m => docs.filter(pmod(col("doc_id"), lit(20L)) === m))
+    }
 
   /** One admit→fold step of the streaming IMAGE ingest sink: the
     * arriving batch is raw (doc_id, text) rows — the sink derives the
@@ -2598,64 +2081,39 @@ object StreamOps {
     * decode → dHash), screens it against the newest committed index
     * version with the DIRECTIONAL banded probe, writes the batch's
     * verdict ledger, and folds the survivors' HASH rows into the next
-    * version. Unlike the text chain, no side-channel verify table is
-    * needed: the four band keys ARE the 64-bit hash, so the persisted
-    * index is self-verifying — state versions carry (img_id, doc_id,
-    * variant, b0..b3) and both the candidate bands and the exact
-    * Hamming verify read off it. Exactly-once by the seeded version
-    * chain ([[applyIngestBatch]]'s argument). */
-  private[graft] def applyImageIngestBatch(batch: DataFrame, batchId: Long,
-      statePath: String, verdictsPath: String): Unit = {
-    val s = batch.sparkSession
+    * version (a seeded [[VersionChain]]). Unlike the text chain, no
+    * side-channel verify table is needed: the four band keys ARE the
+    * 64-bit hash, so the persisted index is self-verifying — state
+    * versions carry (img_id, doc_id, variant, b0..b3) and both the
+    * candidate bands and the exact Hamming verify read off it. */
+  private def applyImageIngestBatch(c: VersionChain,
+      batch: DataFrame, batchId: Long): Unit = {
     val mm = graft.multimodal.Multimodal
-    val fs = hadoopFs(s, statePath)
-    val root = new org.apache.hadoop.fs.Path(statePath)
     val bhashes = mm.variantHashesOf(batch)
       .localCheckpoint(true) // decode+hash once: screen twice + fold
-    val prevV = committedVersions(fs, root).filter(_ <= batchId)
-      .sorted.lastOption
-      .getOrElse(sys.error(s"no committed index version <= $batchId " +
-        s"under $statePath — the base seed (v=0) is missing"))
-    val index = s.read.parquet(s"$statePath/v=$prevV")
+    val prev = c.base(batchId)
+    val index = c.read(prev)
     val verdicts = mm.screenImgBatch(
       bhashes.select(col("img_id").as("bi")),
       mm.imgBandRows(bhashes), mm.imgBandRows(index), bhashes, index)
       .localCheckpoint(true) // ledger write + survivor fold
-    val prevP = new org.apache.hadoop.fs.Path(s"$statePath/v=$prevV")
-    sizedForState(verdicts.withColumn("batch", lit(batchId)),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$verdictsPath/b=$batchId")
-    val survivors = verdicts.filter(!col("is_dup"))
-      .select(col("bi").as("img_id"))
-    sizedForState(index.unionByName(
-        bhashes.join(survivors, Seq("img_id"), "left_semi")),
-        fs, Seq(prevP))
-      .write.mode("overwrite").parquet(s"$statePath/v=${batchId + 1}")
+    c.commit(batchId, Some(prev), VersionChain.Side("b",
+        verdicts.withColumn("batch", lit(batchId)))) {
+      val survivors = verdicts.filter(!col("is_dup"))
+        .select(col("bi").as("img_id"))
+      index.unionByName(bhashes.join(survivors, Seq("img_id"), "left_semi"))
+    }
   }
 
-  /** The image ingest chain through [[runVersionedStream]]. */
-  private[graft] def runImageIngestChain(s: SparkSession, src: String,
-      state: String, verd: String, ckpt: String,
-      crashAfter: Option[Long] = None): Unit =
-    runVersionedStream(s, src, ckpt, crashAfter)((batch, batchId) =>
-      applyImageIngestBatch(batch, batchId, state, verd))
-
-  /** The committed verdict ledger across both [[ImgIngestSlices]]
-    * batches, in doc terms. */
-  private def imageIngestLedger(s: SparkSession, verd: String): DataFrame = {
-    val fs = hadoopFs(s, verd)
-    val ledgers = ImgIngestSlices.indices.map { i =>
-      val p = s"$verd/b=$i"
-      require(fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")),
-        s"image ingest batch $i left no committed verdict ledger at $p")
-      s.read.parquet(p)
-    }
-    ledgers.reduce(_ unionByName _)
-      .select(col("batch"), expr("bi div 2").as("doc_id"),
-        expr("best_base div 2").as("best_doc"),
-        (col("best_base") % 2).cast("long").as("best_var"),
-        col("best_hamming"), col("is_dup"))
-      .orderBy("batch", "doc_id").localCheckpoint(true)
+  /** The image ingest chain: the ORIGINALS' hashes at v=0,
+    * [[applyImageIngestBatch]] per batch. */
+  private[graft] def imageChain(s: SparkSession,
+      d: String): VersionChain.Spec = {
+    graft.io.Tables.ensureSessionRegistered(s)
+    val mm = graft.multimodal.Multimodal
+    VersionChain.Spec("imging", imgSplit(s, d),
+      _.seed(mm.imgHashes(s, d).filter(col("variant") === 0)),
+      applyImageIngestBatch)
   }
 
   /** From-scratch two-phase admission oracle for the image chain: the
@@ -2751,35 +2209,24 @@ object StreamOps {
   val qStreamImageIngest: graft.queries.Q =
     graft.queries.Q("q_stream_image_ingest", imageIngestOracleSql) {
       (s, d) =>
-        graft.io.Tables.ensureSessionRegistered(s)
-        val mm = graft.multimodal.Multimodal
-        val src = imgSplit(s, d)
-        val runId = java.util.UUID.randomUUID()
-        val root = scratchRoot(s)
-        val state = s"$root/graft_imging_state_$runId"
-        val verd = s"$root/graft_imging_verd_$runId"
-        val ckpt = s"$root/graft_imging_ckpt_$runId"
-        try {
-          withStatePartitions(s) {
-            mm.imgHashes(s, d).filter(col("variant") === 0)
-              .write.mode("overwrite").parquet(s"$state/v=0")
-            runImageIngestChain(s, src, state, verd, ckpt)
-            val fs = hadoopFs(s, state)
-            val finalV = committedVersions(fs,
-              new org.apache.hadoop.fs.Path(state)).sorted.last
-            require(finalV == ImgIngestSlices.size.toLong,
-              s"expected ${ImgIngestSlices.size} folds, newest $finalV")
-            imageIngestLedger(s, verd)
-          }
-        } finally for (p <- Seq(state, verd, ckpt)) deletePath(s, p)
+        VersionChain.run(s, imageChain(s, d))(
+          _.ledger(ImgIngestSlices.size, col("batch"),
+            expr("bi div 2").as("doc_id"),
+            expr("best_base div 2").as("best_doc"),
+            (col("best_base") % 2).cast("long").as("best_var"),
+            col("best_hamming"), col("is_dup")))
     }
+
+  /** The registered queries that drive a seeded chain ([[VersionChain]]
+    * with its base at v=0) — [[graft.Bench]] times these 1 + 1. */
+  val ingestChains: Seq[graft.queries.Q] =
+    Seq(qStreamDedupIngest, qStreamIngestRestart, qStreamRetuneIngest,
+      qStreamAnnIngest, qStreamRetrainIngest, qStreamResizeIngest,
+      qStreamCalibrateIngest, qStreamImageIngest)
 
   /** The streaming family's registered (oracle-gated) queries; the
     * remaining operators above are spec-gated batch/stream twins. */
   val all: Seq[graft.queries.Q] =
     Seq(qStreamHourly, qStreamMerge, qStreamMergeBucketed,
-      qStreamSessionize, qStreamConversionLag, qStreamDedupIngest,
-      qStreamIngestRestart, qStreamRetuneIngest, qStreamAnnIngest,
-      qStreamRetrainIngest, qStreamResizeIngest, qStreamCalibrateIngest,
-      qStreamImageIngest)
+      qStreamSessionize, qStreamConversionLag) ++ ingestChains
 }

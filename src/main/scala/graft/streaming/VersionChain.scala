@@ -1,0 +1,255 @@
+package graft.streaming
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+/** The version-chain protocol every stateful stream sink in [[StreamOps]]
+  * runs on. A chain is a directory of parquet versions `v=N`, each
+  * committed by the `_SUCCESS` marker the parquet job commit writes last;
+  * micro-batch `b` writes output version [[out]]`(b)` — `b` itself for
+  * the merge sinks, `b + 1` for the seeded chains whose `v=0` is written
+  * before the stream starts. The contract that makes a replayed batch
+  * exactly-once:
+  *   - a batch reads only the newest COMMITTED version below its output
+  *     ([[newestCommittedBelow]]): a replay never chains off its own
+  *     earlier output, and a torn (marker-less) version is invisible;
+  *   - a version's side artifacts — the quantizer `q=`, the probe width
+  *     `p=`, the batch's verdict ledger `b=` — are written before its
+  *     `v=` marker ([[commit]]), so a committed `v=N` implies they are
+  *     readable;
+  *   - a batch overwrites only its own output (`v=`, `q=`, `p=` at its
+  *     output version, `b=` at its batch id);
+  *   - so a replay re-derives every artifact from the same committed
+  *     inputs: replay equals first run. A batch's maintenance decision
+  *     (retune, retrain, resize) lives inside its own version write for
+  *     exactly this reason.
+  * [[VersionChain.run]] owns the per-run lifecycle around it. `state`,
+  * `verd` (ledgers) and `ckpt` (the streaming checkpoint) share one
+  * file system.
+  */
+private[graft] final class VersionChain(s: SparkSession, val state: String,
+    val verd: String = "", val ckpt: String = "", seeded: Boolean = false) {
+  import VersionChain._
+
+  private val fs = hadoopFs(s, state)
+
+  /** The version micro-batch `batchId` writes. */
+  def out(batchId: Long): Long = if (seeded) batchId + 1 else batchId
+
+  def path(kind: String, v: Long): String = s"$state/$kind=$v"
+
+  /** Committed versions, ascending. */
+  def committed: Seq[Long] = committedVersions(fs, new Path(state)).sorted
+
+  def newestCommittedBelow(out: Long): Option[Long] =
+    committed.filter(_ < out).lastOption
+
+  def newest: Long = committed.lastOption
+    .getOrElse(sys.error(s"no committed version under $state"))
+
+  /** The version batch `batchId` chains off, if any (a merge chain's
+    * first batch has none). */
+  def prev(batchId: Long): Option[Long] = newestCommittedBelow(out(batchId))
+
+  /** [[prev]] of a seeded chain, which always has one. */
+  def base(batchId: Long): Long = prev(batchId).getOrElse(sys.error(
+    s"no committed version below ${out(batchId)} under $state — the " +
+      "seed (v=0) is missing"))
+
+  def read(v: Long, kind: String = "v"): DataFrame =
+    s.read.parquet(path(kind, v))
+
+  /** Write a seed artifact at version 0, unsized. */
+  def seed(frame: DataFrame, kind: String = "v"): Unit =
+    frame.write.mode("overwrite").parquet(path(kind, 0))
+
+  /** Commit batch `batchId`'s output: the `sides` in order, then `next`
+    * as `v=out` — the marker. `next` is by-name, so whatever computing it
+    * runs happens after the sides are written. Writes are sized by the
+    * bytes of the predecessor version `from`; a side with `rows` is
+    * sized by its row count instead. */
+  def commit(batchId: Long, from: Option[Long], sides: Side*)(
+      next: => DataFrame): Unit = {
+    val src = from.toSeq.map(v => new Path(path("v", v)))
+    sides.foreach { sd =>
+      val dst =
+        if (sd.kind == "b") s"$verd/b=$batchId"
+        else path(sd.kind, out(batchId))
+      sd.rows.fold(sizedForState(sd.frame, fs, src))(sizedByRows(sd.frame, _))
+        .write.mode("overwrite").parquet(dst)
+    }
+    sizedForState(next, fs, src).write.mode("overwrite")
+      .parquet(path("v", out(batchId)))
+  }
+
+  /** Keep the newest `keep` versions, committed or not. Three for the
+    * merge sinks: a replayed batch N re-reads the newest version < N,
+    * so its predecessor must survive batch N's own prune. */
+  def prune(keep: Int): Unit =
+    fs.listStatus(new Path(state)).toSeq.map(_.getPath.getName)
+      .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
+      .sorted.reverse.drop(keep)
+      .foreach(v => fs.delete(new Path(path("v", v)), true))
+
+  /** The chain of one hash bucket, under `bucket=<b>`. */
+  def bucket(b: Long): VersionChain =
+    new VersionChain(s, s"$state/bucket=$b", verd, ckpt, seeded)
+
+  /** The committed verdict ledgers of batches `0 until batches`,
+    * projected to `cols` and ordered by (batch, doc_id). */
+  def ledger(batches: Int, cols: Column*): DataFrame =
+    (0 until batches).map { i =>
+      val p = s"$verd/b=$i"
+      require(fs.exists(new Path(p, "_SUCCESS")),
+        s"batch $i left no committed verdict ledger at $p")
+      s.read.parquet(p)
+    }.reduce(_ unionByName _)
+      .select(cols: _*).orderBy("batch", "doc_id").localCheckpoint(true)
+}
+
+private[graft] object VersionChain {
+
+  /** A side artifact of a version (see [[VersionChain.commit]]). */
+  final case class Side(kind: String, frame: DataFrame,
+      rows: Option[Long] = None)
+
+  /** One chain's domain: the scratch-dir name, the file split it
+    * streams (one micro-batch per file), the seed written before the
+    * stream starts, and the per-batch step. */
+  final case class Spec(name: String, src: String,
+      seed: VersionChain => Unit,
+      step: (VersionChain, DataFrame, Long) => Unit,
+      seeded: Boolean = true)
+
+  /** Deliberate mid-chain crash: thrown after the designated batch's
+    * writes commit but BEFORE the runtime records the batch in the
+    * checkpoint commit log — exactly the torn state a real driver loss
+    * leaves behind, and the one the chain contract must survive. */
+  final class InjectedCrash(msg: String) extends RuntimeException(msg)
+
+  @annotation.tailrec
+  private def isInjected(t: Throwable): Boolean = t match {
+    case null => false
+    case _: InjectedCrash => true
+    case other => isInjected(other.getCause)
+  }
+
+  /** One run of a chain: UUID-unique state, ledger and checkpoint dirs
+    * under [[StreamOps.scratchRoot]], the seed, one streaming leg per
+    * entry of `crashes` (each killed by an [[InjectedCrash]] right after
+    * that batch commits sink-side, then checked torn and handed to
+    * `afterCrash`), a final leg resuming from the same checkpoint, a
+    * check that every batch of a seeded chain committed its version
+    * (a bucketed merge keeps its versions per bucket), then `result` — all
+    * inside one [[StreamOps.withStatePartitions]] scope, with the dirs
+    * deleted in `finally`. `result` must materialize what it returns. */
+  def run[T](s: SparkSession, spec: Spec, crashes: Seq[Long] = Nil,
+      afterCrash: (VersionChain, Long) => Unit = (_, _) => ())(
+      result: VersionChain => T): T = {
+    val runId = java.util.UUID.randomUUID()
+    val root = StreamOps.scratchRoot(s)
+    def dir(kind: String) = s"$root/graft_${spec.name}_${kind}_$runId"
+    val c = new VersionChain(s, dir("state"), dir("verd"), dir("ckpt"),
+      spec.seeded)
+    try StreamOps.withStatePartitions(s) {
+      spec.seed(c)
+      crashes.foreach { k =>
+        leg(s, spec, c, Some(k))
+        require(c.committed.lastOption.contains(c.out(k)) &&
+          !hadoopFs(s, c.ckpt).exists(new Path(s"${c.ckpt}/commits/$k")),
+          s"${spec.name}: the crash after batch $k must leave its version " +
+            "sink-committed, the tail unrun and the batch " +
+            "checkpoint-uncommitted")
+        afterCrash(c, k)
+      }
+      leg(s, spec, c, None)
+      if (spec.seeded) {
+        val batches = hadoopFs(s, spec.src).listStatus(new Path(spec.src))
+          .count(_.getPath.getName.endsWith(".parquet"))
+        require(c.committed.lastOption.contains(c.out(batches - 1L)),
+          s"${spec.name}: expected $batches committed batches, newest " +
+            s"version ${c.committed.lastOption}")
+      }
+      result(c)
+    } finally for (p <- Seq(c.state, c.verd, c.ckpt)) delete(s, p)
+  }
+
+  /** One streaming leg: one file of `spec.src` per micro-batch,
+    * `spec.step` as the foreachBatch sink, resuming from whatever the
+    * checkpoint says is next (a checkpoint whose last batch committed
+    * sink-side but not runtime-side REPLAYS that batch). */
+  private def leg(s: SparkSession, spec: Spec, c: VersionChain,
+      crashAfter: Option[Long]): Unit = {
+    val schema = s.read.parquet(spec.src).schema
+    val q = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(spec.src)
+      .writeStream.option("checkpointLocation", c.ckpt)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        spec.step(c, batch, batchId)
+        if (crashAfter.contains(batchId))
+          throw new InjectedCrash(s"injected crash after batch $batchId")
+      }.start()
+    try q.processAllAvailable()
+    catch { case t: Throwable if crashAfter.nonEmpty && isInjected(t) => () }
+    finally q.stop()
+  }
+
+  private[streaming] def hadoopFs(s: SparkSession, path: String): FileSystem =
+    FileSystem.get(new java.net.URI(path), s.sessionState.newHadoopConf())
+
+  private[streaming] def delete(s: SparkSession, path: String): Unit = {
+    hadoopFs(s, path).delete(new Path(path), true)
+    ()
+  }
+
+  /** Versions under `root` whose write COMMITTED (the `_SUCCESS` marker
+    * the parquet job commit protocol writes last). A crash mid-write
+    * leaves a `v=` directory with some task-committed part files and no
+    * marker — a TORN version that must be invisible to every reader:
+    * the state read surface would serve partial sums, and a merge must
+    * never chain off one. The chaos spec in StreamOpsSpec pins this by
+    * planting exactly such a directory. */
+  private def committedVersions(fs: FileSystem, root: Path): Seq[Long] =
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq
+      .filter(_.getPath.getName.startsWith("v="))
+      .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
+      .map(_.getPath.getName.drop(2).toLong)
+
+  /** Target bytes per state-version output file. */
+  private val StateFileBytes = 64L * 1024 * 1024
+
+  /** Output-file sizing for a state-version write (guide §6 "sensible
+    * output file sizing" / small-files): the write repartitions to
+    * ⌈source bytes / [[StateFileBytes]]⌉ partitions, where the source
+    * bytes are the on-disk length of the version the write derives
+    * from — one driver-side ContentSummary call, no extra Spark job.
+    * Why: every state version was written at the session's shuffle
+    * width, so a ~KB state became 8-16 near-empty files that every later
+    * read re-split into 8-16 tasks. Bytes-derived, not a constant: a
+    * TB-scale state still writes one file per 64 MB.
+    *
+    * `repartition`, NOT `coalesce`: coalesce is NARROW, so coalesce(1)
+    * folds every narrow ancestor — including LAZY localCheckpoint
+    * blocks, which materialize inside the consuming job — into the
+    * single write task, serializing the chain's whole screen/banding/
+    * assignment compute (measured: the ANN chains nondeterministically
+    * ran 2-3× their medians). The repartition exchange keeps upstream
+    * compute at its natural width and moves only the KB-scale result to
+    * the one writer. */
+  private def sizedForState(df: DataFrame, fs: FileSystem,
+      sources: Seq[Path]): DataFrame = {
+    val bytes = sources.filter(fs.exists)
+      .map(p => fs.getContentSummary(p).getLength).sum
+    df.repartition(math.max(1L, (bytes + StateFileBytes - 1) / StateFileBytes)
+      .min(1 << 20).toInt)
+  }
+
+  /** Row-count flavor of [[sizedForState]] for writes whose row count is
+    * already a driver scalar (quantizer matrices, the 1-row width — a
+    * k-row `Seq(...).toDF` otherwise writes defaultParallelism near-empty
+    * files): one output partition per 64 Ki rows, the FrameMemo
+    * RowsPerPartition sizing. */
+  private def sizedByRows(df: DataFrame, rows: Long): DataFrame =
+    df.repartition(math.max(1L, (rows + 65535) / 65536).min(1 << 20).toInt)
+}

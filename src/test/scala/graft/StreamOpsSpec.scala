@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.queries.RelOps
-import graft.streaming.StreamOps
+import graft.streaming.{StreamOps, VersionChain}
 
 /** Streaming surface: the streaming transforms must agree with their
   * oracle-checked batch twins, and run as real streams on MemoryStream. */
@@ -499,15 +499,16 @@ class StreamOpsSpec extends SparkSpec {
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val b0 = Seq((1L, 2.00), (1L, 3.00), (2L, 5.00)).toDF("user_id", "value")
     val b1 = Seq((2L, 1.00), (3L, 4.50)).toDF("user_id", "value")
-    StreamOps.applyMergeBatch(b0, 0L, statePath)
+    val chain = new VersionChain(spark, statePath)
+    StreamOps.applyMergeBatch(chain, b0, 0L)
     assert(state(0) == Map(1L -> ((2L, 500L)), 2L -> ((1L, 500L))))
-    StreamOps.applyMergeBatch(b1, 1L, statePath)
+    StreamOps.applyMergeBatch(chain, b1, 1L)
     val v1 = state(1)
     assert(v1 == Map(
       1L -> ((2L, 500L)), 2L -> ((2L, 600L)), 3L -> ((1L, 450L))))
     // replay batch 1 (stable batch id, same data): state must NOT
     // double-count — the chain reads v=0 again, never its own v=1 output
-    StreamOps.applyMergeBatch(b1, 1L, statePath)
+    StreamOps.applyMergeBatch(chain, b1, 1L)
     assert(state(1) == v1)
   }
 
@@ -538,12 +539,13 @@ class StreamOpsSpec extends SparkSpec {
         .map(r => r.getLong(0) ->
           ((r.getBoolean(3), Option(r.get(1)).map(_ => r.getLong(1)))))
         .toMap
-    StreamOps.applyIngestBatch(batchOf(0L), 0L, state, verd, sh)
+    val chain = new VersionChain(spark, state, verd, seeded = true)
+    StreamOps.applyIngestBatch(chain, batchOf(0L), 0L, sh)
     val v0 = verdicts(0L)
     assert(!v0(10L)._1, s"novel B must survive: ${v0(10L)}")
     assert(v0(20L) == ((true, Some(1L))),
       s"D must be rejected against base A: ${v0(20L)}")
-    StreamOps.applyIngestBatch(batchOf(5L), 1L, state, verd, sh)
+    StreamOps.applyIngestBatch(chain, batchOf(5L), 1L, sh)
     val v1 = verdicts(1L)
     // C caught BY THE FOLDED SURVIVOR; E matches base A, never D
     assert(v1(5L) == ((true, Some(10L))),
@@ -554,7 +556,7 @@ class StreamOpsSpec extends SparkSpec {
     // rewrites b=0 in place — ledger and index stay byte-identical
     val idx1 = spark.read.parquet(s"$state/v=1").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    StreamOps.applyIngestBatch(batchOf(0L), 0L, state, verd, sh)
+    StreamOps.applyIngestBatch(chain, batchOf(0L), 0L, sh)
     assert(verdicts(0L) == v0)
     assert(spark.read.parquet(s"$state/v=1").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet == idx1)
@@ -571,48 +573,29 @@ class StreamOpsSpec extends SparkSpec {
     // dirs, and the final artifacts must be indistinguishable from a
     // run that was never cut.
     import org.apache.hadoop.fs.{FileSystem, Path}
-    graft.io.Tables.ensureSessionRegistered(spark)
-    val src = StreamOps.docsSplit(spark, sf001)
-    val corpusSh = graft.dedup.Dedup.corpusShingles(spark, sf001)
     val slices = StreamOps.IngestSlices
-    val baseIdx = graft.dedup.Dedup.corpusBands(spark, sf001)
-      .filter(!slices.map(m =>
-        pmod(col("doc_id"), lit(10L)) === m).reduce(_ || _))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    def run(crashes: Seq[Long]): (Seq[Seq[Any]], Seq[Long], Set[Seq[Any]]) = {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_restart_spec").toString
-      val (state, verd, ckpt) =
-        (s"$root/state", s"$root/verd", s"$root/ckpt")
-      try {
-        baseIdx.write.mode("overwrite").parquet(s"$state/v=0")
-        crashes.foreach { after =>
-          StreamOps.runIngestChain(spark, src, state, verd, ckpt,
-            corpusSh, crashAfter = Some(after))
+    def run(crashes: Seq[Long]): (Seq[Seq[Any]], Seq[Long], Set[Seq[Any]]) =
+      VersionChain.run(spark, StreamOps.dedupChain(spark, sf001), crashes,
+        afterCrash = (c, after) => {
           // the cut is real and torn: the killed batch sink-committed,
           // absent from the commit log, tail batches not yet run
-          assert(fs.exists(new Path(s"$verd/b=$after/_SUCCESS")))
-          assert(!fs.exists(new Path(s"$ckpt/commits/$after")),
+          assert(fs.exists(new Path(s"${c.verd}/b=$after/_SUCCESS")))
+          assert(!fs.exists(new Path(s"${c.ckpt}/commits/$after")),
             s"batch $after must be checkpoint-uncommitted at the cut")
-          assert(!fs.exists(new Path(s"$verd/b=${slices.size - 1}")),
+          assert(!fs.exists(new Path(s"${c.verd}/b=${slices.size - 1}")),
             "the kill must land mid-chain")
-        }
-        StreamOps.runIngestChain(spark, src, state, verd, ckpt,
-          corpusSh)
+        }) { c =>
         val ledger = slices.indices
-          .map(i => spark.read.parquet(s"$verd/b=$i"))
+          .map(i => spark.read.parquet(s"${c.verd}/b=$i"))
           .reduce(_ unionByName _)
           .select("batch", "doc_id", "best_base", "best_jaccard", "is_dup")
           .orderBy("batch", "doc_id")
           .collect().map(_.toSeq).toSeq
-        val versions = StreamOps
-          .committedVersions(fs, new Path(state)).sorted
-        val finalIdx = spark.read
-          .parquet(s"$state/v=${versions.last}")
-          .collect().map(_.toSeq).toSet
+        val versions = c.committed
+        val finalIdx = c.read(versions.last).collect().map(_.toSeq).toSet
         (ledger, versions, finalIdx)
-      } finally fs.delete(new Path(root), true)
-    }
+      }
     val (ledgerA, versionsA, idxA) = run(crashes = Nil)
     val (ledgerB, versionsB, idxB) = run(crashes = Seq(1L))
     assert(ledgerA.nonEmpty && ledgerA == ledgerB,
@@ -640,54 +623,34 @@ class StreamOpsSpec extends SparkSpec {
     // recoveries must land ledger-, version- and index-identical
     // (including the carried banding shape) to the uninterrupted run.
     import org.apache.hadoop.fs.{FileSystem, Path}
-    graft.io.Tables.ensureSessionRegistered(spark)
-    val src = StreamOps.docsSplit(spark, sf001)
-    val corpusSh = graft.dedup.Dedup.corpusShingles(spark, sf001)
     val slices = StreamOps.IngestSlices
-    val baseIdx = graft.dedup.Dedup.corpusBands(spark, sf001)
-      .filter(!slices.map(m =>
-        pmod(col("doc_id"), lit(10L)) === m).reduce(_ || _))
-      .withColumn("nb", lit(graft.functions.TextHash.Bands))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     def run(crashes: Seq[Long], budget: Double)
-        : (Seq[Seq[Any]], Seq[Long], Set[Seq[Any]], Set[Int]) = {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_retune_spec").toString
-      val (state, verd, ckpt) =
-        (s"$root/state", s"$root/verd", s"$root/ckpt")
-      try {
-        baseIdx.write.mode("overwrite").parquet(s"$state/v=0")
-        crashes.foreach { after =>
-          StreamOps.runRetuneChain(spark, src, state, verd, ckpt,
-            corpusSh, budget, crashAfter = Some(after))
+        : (Seq[Seq[Any]], Seq[Long], Set[Seq[Any]], Set[Int]) =
+      VersionChain.run(spark, StreamOps.dedupChain(spark, sf001, Some(budget)),
+        crashes, afterCrash = (c, after) => {
           // torn: the killed batch's artifacts are sink-committed
           // (for the swap batch that INCLUDES the retuned index
           // version), absent from the commit log, tail batches unrun
-          assert(fs.exists(new Path(s"$verd/b=$after/_SUCCESS")))
-          assert(fs.exists(new Path(s"$state/v=${after + 1}/_SUCCESS")),
+          assert(fs.exists(new Path(s"${c.verd}/b=$after/_SUCCESS")))
+          assert(fs.exists(new Path(s"${c.state}/v=${after + 1}/_SUCCESS")),
             s"batch $after's output version must be sink-committed")
-          assert(!fs.exists(new Path(s"$ckpt/commits/$after")),
+          assert(!fs.exists(new Path(s"${c.ckpt}/commits/$after")),
             s"batch $after must be checkpoint-uncommitted at the cut")
-          assert(!fs.exists(new Path(s"$verd/b=${slices.size - 1}")),
+          assert(!fs.exists(new Path(s"${c.verd}/b=${slices.size - 1}")),
             "the kill must land mid-chain")
-        }
-        StreamOps.runRetuneChain(spark, src, state, verd, ckpt,
-          corpusSh, budget)
+        }) { c =>
         val ledger = slices.indices
-          .map(i => spark.read.parquet(s"$verd/b=$i"))
+          .map(i => spark.read.parquet(s"${c.verd}/b=$i"))
           .reduce(_ unionByName _)
           .select("batch", "doc_id", "best_base", "best_jaccard", "is_dup")
           .orderBy("batch", "doc_id")
           .collect().map(_.toSeq).toSeq
-        val versions = StreamOps
-          .committedVersions(fs, new Path(state)).sorted
-        val finalIdx = spark.read
-          .parquet(s"$state/v=${versions.last}")
-          .collect().map(_.toSeq).toSet
+        val versions = c.committed
+        val finalIdx = c.read(versions.last).collect().map(_.toSeq).toSet
         val nbs = finalIdx.map(_.last.asInstanceOf[Int])
         (ledger, versions, finalIdx, nbs)
-      } finally fs.delete(new Path(root), true)
-    }
+      }
     // uninterrupted, strict budget: the monitor fires after batch 1 and
     // the final index is the 2×8 re-projection of the whole roster
     val (la, va, ia, nbA) = run(Nil, budget = 1.0)
@@ -726,7 +689,6 @@ class StreamOpsSpec extends SparkSpec {
     import org.apache.hadoop.fs.{FileSystem, Path}
     graft.io.Tables.ensureSessionRegistered(spark)
     val sim = graft.similarity.Similarity
-    val src = StreamOps.embSplit(spark, sf001)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     val baseCodes = sim
       .annRetrainBaseCodes(spark, sf001, StreamOps.AnnIngestSlices)
@@ -737,36 +699,25 @@ class StreamOpsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq
         .sortBy(_._1)
     def run(crash: Boolean, budget: Double)
-        : (Set[Seq[Any]], Seq[(Long, Seq[Long])], Seq[Long]) = {
-      import spark.implicits._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_annretrain_spec").toString
-      val (state, ckpt) = (s"$root/state", s"$root/ckpt")
-      try {
-        seed.toDF("cl", "m").write.mode("overwrite").parquet(s"$state/q=0")
-        sim.lloydAssign(baseCodes, seed).select("vec_id", "c", "cl")
-          .write.mode("overwrite").parquet(s"$state/v=0")
-        if (crash) {
-          StreamOps.runAnnRetrainChain(spark, src, state, ckpt, budget,
-            crashAfter = Some(StreamOps.RetrainAfterBatch))
+        : (Set[Seq[Any]], Seq[(Long, Seq[Long])], Seq[Long]) =
+      VersionChain.run(spark, StreamOps.retrainChain(spark, sf001, budget),
+        crashes = if (crash) Seq(StreamOps.RetrainAfterBatch) else Nil,
+        afterCrash = (c, _) => {
           // torn THROUGH the retrain: the retrained assignment AND its
           // quantizer are sink-committed, the batch is absent from the
           // commit log, the tail batch never ran
-          assert(fs.exists(new Path(s"$state/v=1/_SUCCESS")))
-          assert(fs.exists(new Path(s"$state/q=1/_SUCCESS")))
-          assert(!fs.exists(new Path(s"$ckpt/commits/0")),
+          assert(fs.exists(new Path(s"${c.state}/v=1/_SUCCESS")))
+          assert(fs.exists(new Path(s"${c.state}/q=1/_SUCCESS")))
+          assert(!fs.exists(new Path(s"${c.ckpt}/commits/0")),
             "batch 0 must be checkpoint-uncommitted at the cut")
-          assert(!fs.exists(new Path(s"$state/v=2")),
+          assert(!fs.exists(new Path(s"${c.state}/v=2")),
             "the kill must land before the tail batch")
-        }
-        StreamOps.runAnnRetrainChain(spark, src, state, ckpt, budget)
-        val versions = StreamOps
-          .committedVersions(fs, new Path(state)).sorted
-        val cells = spark.read.parquet(s"$state/v=${versions.last}")
+        }) { c =>
+        val versions = c.committed
+        val cells = c.read(versions.last)
           .select("vec_id", "cl").collect().map(_.toSeq).toSet
-        (cells, quantOf(s"$state/q=${versions.last}"), versions)
-      } finally fs.delete(new Path(root), true)
-    }
+        (cells, quantOf(c.path("q", versions.last)), versions)
+      }
     val (ia, qa, va) = run(crash = false, budget = 1.0)
     assert(va == Seq(0L, 1L, 2L))
     assert(qa != seed, "the strict budget must have retrained (the " +
@@ -788,42 +739,28 @@ class StreamOpsSpec extends SparkSpec {
     "query from the same checkpoint land the ledger and the final hash " +
     "index identical to the uninterrupted run") {
     import org.apache.hadoop.fs.{FileSystem, Path}
-    graft.io.Tables.ensureSessionRegistered(spark)
-    val mm = graft.multimodal.Multimodal
-    val src = StreamOps.imgSplit(spark, sf001)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val seed = mm.imgHashes(spark, sf001)
-      .filter(org.apache.spark.sql.functions.col("variant") === 0)
-    def run(crash: Boolean): (Seq[Seq[Any]], Set[Seq[Any]]) = {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_imging_spec").toString
-      val (state, verd, ckpt) = (s"$root/state", s"$root/verd", s"$root/ckpt")
-      try {
-        seed.write.mode("overwrite").parquet(s"$state/v=0")
-        if (crash) {
-          StreamOps.runImageIngestChain(spark, src, state, verd, ckpt,
-            crashAfter = Some(0L))
+    def run(crash: Boolean): (Seq[Seq[Any]], Set[Seq[Any]]) =
+      VersionChain.run(spark, StreamOps.imageChain(spark, sf001),
+        crashes = if (crash) Seq(0L) else Nil,
+        afterCrash = (c, _) => {
           // torn: batch 0's ledger + folded v=1 sink-committed, batch 0
           // absent from the commit log, the tail batch never ran
-          assert(fs.exists(new Path(s"$verd/b=0/_SUCCESS")))
-          assert(fs.exists(new Path(s"$state/v=1/_SUCCESS")))
-          assert(!fs.exists(new Path(s"$ckpt/commits/0")),
+          assert(fs.exists(new Path(s"${c.verd}/b=0/_SUCCESS")))
+          assert(fs.exists(new Path(s"${c.state}/v=1/_SUCCESS")))
+          assert(!fs.exists(new Path(s"${c.ckpt}/commits/0")),
             "batch 0 must be checkpoint-uncommitted at the cut")
-          assert(!fs.exists(new Path(s"$verd/b=1")),
+          assert(!fs.exists(new Path(s"${c.verd}/b=1")),
             "the kill must land before the tail batch")
-        }
-        StreamOps.runImageIngestChain(spark, src, state, verd, ckpt)
-        val versions = StreamOps
-          .committedVersions(fs, new Path(state)).sorted
+        }) { c =>
+        val versions = c.committed
         assert(versions == Seq(0L, 1L, 2L))
         val ledger = (0 to 1).flatMap(i =>
-          spark.read.parquet(s"$verd/b=$i").collect().map(_.toSeq))
+          spark.read.parquet(s"${c.verd}/b=$i").collect().map(_.toSeq))
           .sortBy(_.toString)
-        val index = spark.read.parquet(s"$state/v=2")
-          .collect().map(_.toSeq).toSet
+        val index = c.read(2L).collect().map(_.toSeq).toSet
         (ledger, index)
-      } finally fs.delete(new Path(root), true)
-    }
+      }
     val (la, ia) = run(crash = false)
     assert(la.nonEmpty && ia.nonEmpty)
     val (lb, ib) = run(crash = true)
@@ -837,7 +774,6 @@ class StreamOpsSpec extends SparkSpec {
     import org.apache.hadoop.fs.{FileSystem, Path}
     graft.io.Tables.ensureSessionRegistered(spark)
     val sim = graft.similarity.Similarity
-    val src = StreamOps.embSplit(spark, sf001)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     val baseCodes = sim
       .annRetrainBaseCodes(spark, sf001, StreamOps.AnnIngestSlices)
@@ -851,38 +787,25 @@ class StreamOpsSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getSeq[Long](1).toSeq)).toSeq
         .sortBy(_._1)
     def run(crash: Boolean, occ: Int)
-        : (Set[Seq[Any]], Seq[(Long, Seq[Long])], Seq[Long]) = {
-      import spark.implicits._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_annresize_spec").toString
-      val (state, ckpt) = (s"$root/state", s"$root/ckpt")
-      val k0 = sim.derivedCellsFor(nBase, occ)
-      val seed = sim.lloydSeedN(baseCodes, k0)
-      try {
-        seed.toDF("cl", "m").write.mode("overwrite").parquet(s"$state/q=0")
-        sim.lloydAssignScaled(baseCodes, seed).select("vec_id", "c", "cl")
-          .write.mode("overwrite").parquet(s"$state/v=0")
-        if (crash) {
-          StreamOps.runAnnResizeChain(spark, src, state, ckpt, occ,
-            crashAfter = Some(StreamOps.ResizeAfterBatch))
+        : (Set[Seq[Any]], Seq[(Long, Seq[Long])], Seq[Long]) =
+      VersionChain.run(spark, StreamOps.resizeChain(spark, sf001, occ),
+        crashes = if (crash) Seq(StreamOps.ResizeAfterBatch) else Nil,
+        afterCrash = (c, _) => {
           // torn THROUGH the resize: the re-sized assignment AND its
           // k1-row quantizer are sink-committed, the batch is absent
           // from the commit log, the tail batch never ran
-          assert(fs.exists(new Path(s"$state/v=1/_SUCCESS")))
-          assert(fs.exists(new Path(s"$state/q=1/_SUCCESS")))
-          assert(!fs.exists(new Path(s"$ckpt/commits/0")),
+          assert(fs.exists(new Path(s"${c.state}/v=1/_SUCCESS")))
+          assert(fs.exists(new Path(s"${c.state}/q=1/_SUCCESS")))
+          assert(!fs.exists(new Path(s"${c.ckpt}/commits/0")),
             "batch 0 must be checkpoint-uncommitted at the cut")
-          assert(!fs.exists(new Path(s"$state/v=2")),
+          assert(!fs.exists(new Path(s"${c.state}/v=2")),
             "the kill must land before the tail batch")
-        }
-        StreamOps.runAnnResizeChain(spark, src, state, ckpt, occ)
-        val versions = StreamOps
-          .committedVersions(fs, new Path(state)).sorted
-        val cells = spark.read.parquet(s"$state/v=${versions.last}")
+        }) { c =>
+        val versions = c.committed
+        val cells = c.read(versions.last)
           .select("vec_id", "cl").collect().map(_.toSeq).toSet
-        (cells, quantOf(s"$state/q=${versions.last}"), versions)
-      } finally fs.delete(new Path(root), true)
-    }
+        (cells, quantOf(c.path("q", versions.last)), versions)
+      }
     val occ = StreamOps.StreamTargetOcc
     val k0 = sim.derivedCellsFor(nBase, occ)
     val k1 = sim.derivedCellsFor(nPrefix, occ)
@@ -918,52 +841,33 @@ class StreamOpsSpec extends SparkSpec {
     import org.apache.hadoop.fs.{FileSystem, Path}
     graft.io.Tables.ensureSessionRegistered(spark)
     val sim = graft.similarity.Similarity
-    val src = StreamOps.embSplit(spark, sf001)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val baseCodes = sim
-      .annRetrainBaseCodes(spark, sf001, StreamOps.AnnIngestSlices)
-      .localCheckpoint(true)
-    val nBase = baseCodes.count()
+    val nBase = sim
+      .annRetrainBaseCodes(spark, sf001, StreamOps.AnnIngestSlices).count()
+    def width(c: VersionChain, v: Long): Int =
+      c.read(v, "p").head().getLong(0).toInt
     def run(crash: Boolean, occ: Int)
-        : (Set[Seq[Any]], Int, Int, Seq[Long]) = {
-      import spark.implicits._
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_anncal_spec").toString
-      val (state, ckpt) = (s"$root/state", s"$root/ckpt")
-      val k0 = sim.derivedCellsFor(nBase, occ)
-      val seed = sim.lloydSeedN(baseCodes, k0)
-      try {
-        seed.toDF("cl", "m").write.mode("overwrite").parquet(s"$state/q=0")
-        val baseAssigned = sim.lloydAssignScaled(baseCodes, seed)
-          .select("vec_id", "c", "cl").localCheckpoint(true)
-        val w0 = sim.calibratedLloydWidth(baseAssigned, seed)
-        Seq(w0.toLong).toDF("w")
-          .write.mode("overwrite").parquet(s"$state/p=0")
-        baseAssigned.write.mode("overwrite").parquet(s"$state/v=0")
-        if (crash) {
-          StreamOps.runAnnCalibrateChain(spark, src, state, ckpt, occ,
-            crashAfter = Some(StreamOps.ResizeAfterBatch))
+        : (Set[Seq[Any]], Int, Int, Seq[Long]) =
+      VersionChain.run(spark,
+        StreamOps.resizeChain(spark, sf001, occ, calibrate = true),
+        crashes = if (crash) Seq(StreamOps.ResizeAfterBatch) else Nil,
+        afterCrash = (c, _) => {
           // torn THROUGH resize + recalibration: q=1 (k1 rows) and p=1
           // (the recalibrated width) are sink-committed, the batch is
           // checkpoint-uncommitted, the tail batch never ran
-          assert(fs.exists(new Path(s"$state/q=1/_SUCCESS")))
-          assert(fs.exists(new Path(s"$state/p=1/_SUCCESS")))
-          assert(fs.exists(new Path(s"$state/v=1/_SUCCESS")))
-          assert(!fs.exists(new Path(s"$ckpt/commits/0")),
+          assert(fs.exists(new Path(s"${c.state}/q=1/_SUCCESS")))
+          assert(fs.exists(new Path(s"${c.state}/p=1/_SUCCESS")))
+          assert(fs.exists(new Path(s"${c.state}/v=1/_SUCCESS")))
+          assert(!fs.exists(new Path(s"${c.ckpt}/commits/0")),
             "batch 0 must be checkpoint-uncommitted at the cut")
-          assert(!fs.exists(new Path(s"$state/v=2")),
+          assert(!fs.exists(new Path(s"${c.state}/v=2")),
             "the kill must land before the tail batch")
-        }
-        StreamOps.runAnnCalibrateChain(spark, src, state, ckpt, occ)
-        val versions = StreamOps
-          .committedVersions(fs, new Path(state)).sorted
-        val cells = spark.read.parquet(s"$state/v=${versions.last}")
+        }) { c =>
+        val versions = c.committed
+        val cells = c.read(versions.last)
           .select("vec_id", "cl").collect().map(_.toSeq).toSet
-        val wF = spark.read.parquet(s"$state/p=${versions.last}")
-          .head().getLong(0).toInt
-        (cells, w0, wF, versions)
-      } finally fs.delete(new Path(root), true)
-    }
+        (cells, width(c, 0L), width(c, versions.last), versions)
+      }
     val occ = StreamOps.StreamTargetOcc
     val (ia, w0a, wa, va) = run(crash = false, occ)
     assert(va == Seq(0L, 1L, 2L))
@@ -1002,41 +906,23 @@ class StreamOpsSpec extends SparkSpec {
     // torn state (batch sink-committed, checkpoint-uncommitted), same
     // version-chain recovery, on the IVF fold chain
     import org.apache.hadoop.fs.{FileSystem, Path}
-    graft.io.Tables.ensureSessionRegistered(spark)
-    val sim = graft.similarity.Similarity
-    val src = StreamOps.embSplit(spark, sf001)
-    val anchors = sim.ivfAnchors(spark, sf001).localCheckpoint(true)
     val slices = StreamOps.AnnIngestSlices
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    def run(crash: Boolean): (Seq[Long], Set[Seq[Any]]) = {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_ann_restart").toString
-      val (state, ckpt) = (s"$root/state", s"$root/ckpt")
-      try {
-        sim.ivfBaseCells(spark, sf001, slices)
-          .write.mode("overwrite").parquet(s"$state/v=0")
-        def drive(crashAfter: Option[Long]) =
-          StreamOps.runVersionedStream(spark, src, ckpt, crashAfter)(
-            (b, id) => StreamOps.applyAnnIngestBatch(b, id, state, anchors))
-        if (crash) {
-          drive(Some(0L))
+    def run(crash: Boolean): (Seq[Long], Set[Seq[Any]]) =
+      VersionChain.run(spark, StreamOps.annChain(spark, sf001),
+        crashes = if (crash) Seq(0L) else Nil,
+        afterCrash = (c, _) => {
           // torn: v=1 sink-committed, batch 0 checkpoint-uncommitted,
           // batch 1 never ran
-          assert(fs.exists(new Path(s"$state/v=1/_SUCCESS")))
-          assert(!fs.exists(new Path(s"$ckpt/commits/0")),
+          assert(fs.exists(new Path(s"${c.state}/v=1/_SUCCESS")))
+          assert(!fs.exists(new Path(s"${c.ckpt}/commits/0")),
             "batch 0 must be checkpoint-uncommitted at the cut")
-          assert(!fs.exists(new Path(s"$state/v=${slices.size}")),
+          assert(!fs.exists(new Path(s"${c.state}/v=${slices.size}")),
             "the kill must land mid-chain")
-          drive(None)
-        } else drive(None)
-        val versions = StreamOps
-          .committedVersions(fs, new Path(state)).sorted
-        val finalIdx = spark.read
-          .parquet(s"$state/v=${versions.last}")
-          .collect().map(_.toSeq).toSet
-        (versions, finalIdx)
-      } finally fs.delete(new Path(root), true)
-    }
+        }) { c =>
+        val versions = c.committed
+        (versions, c.read(versions.last).collect().map(_.toSeq).toSet)
+      }
     val (vA, idxA) = run(crash = false)
     val (vB, idxB) = run(crash = true)
     assert(vA == (0L to slices.size).toSeq && vB == vA,
@@ -1066,7 +952,8 @@ class StreamOpsSpec extends SparkSpec {
     def cellsOf(v: Long): Map[Long, Long] =
       spark.read.parquet(s"$state/v=$v").collect()
         .map(r => r.getLong(0) -> r.getLong(3)).toMap
-    StreamOps.applyAnnIngestBatch(batch, 0L, state, anchors)
+    val chain = new VersionChain(spark, state, seeded = true)
+    StreamOps.applyAnnIngestBatch(chain, batch, 0L, anchors)
     val v1 = cellsOf(1L)
     val fromScratch = sim.ivfBaseCells(spark, sf001, Seq(slices(1)))
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
@@ -1074,7 +961,7 @@ class StreamOpsSpec extends SparkSpec {
       "fold(v0, streamed batch) must equal the from-scratch index " +
         "without the not-yet-arrived slice")
     // replay batch 0: reads v=0 again, rewrites v=1 — no duplication
-    StreamOps.applyAnnIngestBatch(batch, 0L, state, anchors)
+    StreamOps.applyAnnIngestBatch(chain, batch, 0L, anchors)
     assert(cellsOf(1L) == v1)
     assert(spark.read.parquet(s"$state/v=1").count() == v1.size.toLong)
   }
@@ -1094,15 +981,16 @@ class StreamOpsSpec extends SparkSpec {
     def state(): Map[Long, (Long, Long)] =
       StreamOps.readBucketedState(spark, statePath).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val bucketed = new VersionChain(spark, statePath)
     // 4 buckets; batch 0 touches buckets {1, 2} (keys 1, 2, 5),
     // batch 1 touches bucket {3} only (key 7)
     val b0 = Seq((1L, 2.00), (5L, 3.00), (2L, 5.00))
       .toDF("user_id", "value")
     val b1 = Seq((7L, 4.50)).toDF("user_id", "value")
-    StreamOps.applyMergeBatchBucketed(b0, 0L, statePath, buckets = 4)
+    StreamOps.applyMergeBatchBucketed(bucketed, b0, 0L, buckets = 4)
     assert(versions(1) == Seq(0L) && versions(2) == Seq(0L))
     assert(versions(0).isEmpty && versions(3).isEmpty)
-    StreamOps.applyMergeBatchBucketed(b1, 1L, statePath, buckets = 4)
+    StreamOps.applyMergeBatchBucketed(bucketed, b1, 1L, buckets = 4)
     // O(touched): batch 1 created NO new version in buckets 1 and 2
     assert(versions(1) == Seq(0L) && versions(2) == Seq(0L))
     assert(versions(3) == Seq(1L))
@@ -1112,14 +1000,15 @@ class StreamOpsSpec extends SparkSpec {
     assert(state() == expected)
     // replay batch 1: bucket 3's chain re-reads newest v < 1 (nothing)
     // and rewrites exactly its own v=1 — state unchanged
-    StreamOps.applyMergeBatchBucketed(b1, 1L, statePath, buckets = 4)
+    StreamOps.applyMergeBatchBucketed(bucketed, b1, 1L, buckets = 4)
     assert(state() == expected)
     // and the read surface equals the UNBUCKETED sink fed the same
     // batches (bucketing is a pure layout refinement)
     val flatPath = java.nio.file.Files
       .createTempDirectory("graft_merge_flat").toString
-    StreamOps.applyMergeBatch(b0, 0L, flatPath)
-    StreamOps.applyMergeBatch(b1, 1L, flatPath)
+    val flatChain = new VersionChain(spark, flatPath)
+    StreamOps.applyMergeBatch(flatChain, b0, 0L)
+    StreamOps.applyMergeBatch(flatChain, b1, 1L)
     val flat = spark.read.parquet(s"$flatPath/v=1").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(state() == flat)
@@ -1165,7 +1054,8 @@ class StreamOpsSpec extends SparkSpec {
     def state(): Map[Long, (Long, Long)] =
       StreamOps.readBucketedState(spark, statePath).collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    StreamOps.applyMergeBatchBucketed(b0, 0L, statePath, buckets = 4)
+    val bucketed = new VersionChain(spark, statePath)
+    StreamOps.applyMergeBatchBucketed(bucketed, b0, 0L, buckets = 4)
     val preCrash = Map(1L -> ((1L, 200L)), 2L -> ((1L, 500L)))
     assert(state() == preCrash)
     // batch 1 dies mid-write to bucket 1
@@ -1175,27 +1065,28 @@ class StreamOpsSpec extends SparkSpec {
       "read surface served a torn (uncommitted) version")
     // (2) restart re-delivers batch 1 (same id): torn dir overwritten,
     //     merge chained off the committed v=0 — exactly-once totals
-    StreamOps.applyMergeBatchBucketed(b1, 1L, statePath, buckets = 4)
+    StreamOps.applyMergeBatchBucketed(bucketed, b1, 1L, buckets = 4)
     val after = Map(
       1L -> ((2L, 300L)), 2L -> ((1L, 500L)), 3L -> ((1L, 400L)))
     assert(state() == after)
     // (3) crash AFTER write but BEFORE checkpoint commit: one more
     //     replay of the same batch — still no double-apply
-    StreamOps.applyMergeBatchBucketed(b1, 1L, statePath, buckets = 4)
+    StreamOps.applyMergeBatchBucketed(bucketed, b1, 1L, buckets = 4)
     assert(state() == after)
 
     // -- unbucketed sibling, same crash shape
     val flatPath = java.nio.file.Files
       .createTempDirectory("graft_merge_chaos_flat").toString
-    StreamOps.applyMergeBatch(b0, 0L, flatPath)
+    val flatChain = new VersionChain(spark, flatPath)
+    StreamOps.applyMergeBatch(flatChain, b0, 0L)
     plantTorn(s"$flatPath/v=1", key = 1L)
-    StreamOps.applyMergeBatch(b1, 1L, flatPath)
+    StreamOps.applyMergeBatch(flatChain, b1, 1L)
     val flat = spark.read.parquet(s"$flatPath/v=1").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(flat == after)
     // subsequent batches chain cleanly past the recovered crash
     val b2 = Seq((3L, 1.00)).toDF("user_id", "value")
-    StreamOps.applyMergeBatch(b2, 2L, flatPath)
+    StreamOps.applyMergeBatch(flatChain, b2, 2L)
     val v2 = spark.read.parquet(s"$flatPath/v=2").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(v2 == after.updated(3L, (2L, 500L)))
@@ -1369,6 +1260,29 @@ class StreamOpsSpec extends SparkSpec {
     assert(StreamOps.qStreamHourly.fn(spark, sf001).count() > 0)
     assert(spark.catalog.listTables().count() == viewsBefore,
       "memory-sink temp view leaked")
+  }
+
+  test("a chain whose step fails restores the session conf and leaves no " +
+    "per-run scratch") {
+    val alt = java.nio.file.Files
+      .createTempDirectory("graft_fail_root_").toString
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val before = keys.map(spark.conf.get)
+    spark.conf.set("spark.graft.scratchRoot", alt)
+    try {
+      // the seed commits v=0 and the stream creates its checkpoint before
+      // the first batch's step throws
+      val failing = StreamOps.annChain(spark, sf001).copy(
+        step = (_, _, _) => throw new IllegalStateException("step failed"))
+      val e = intercept[Exception](VersionChain.run(spark, failing)(_ => ()))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[IllegalStateException]), e)
+      assert(keys.map(spark.conf.get) == before,
+        "withStatePartitions did not restore the session conf")
+      val leaked = new java.io.File(alt).list().toSeq
+        .filter(_.matches("graft_.*_(state|verd|ckpt)_.*"))
+      assert(leaked.isEmpty, s"leaked: ${leaked.mkString(",")}")
+    } finally spark.conf.unset("spark.graft.scratchRoot")
   }
 
   test("stateful split: 6 ordered files, out-of-order delivery, no row " +
