@@ -28,8 +28,15 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * ELEMENTS are skipped the way `array_min` skips them; an empty input
   * (or all-null) yields null per slot — the `< 3`-token document case
   * whose banding both engines already handle through null-skipping
-  * `concat_ws`. Arithmetic is the same overflow-safe affine mod-P over
-  * longs the DuckDB oracle embeds ([[TextHash.minhashSql]]). */
+  * `concat_ws`. A NULL input is the one divergence: the kernel is
+  * null-intolerant, so a NULL `hs` yields a NULL signature, while the
+  * composed form yields a non-null array of K null slots (`array()` of K
+  * NULL `array_min`s). Callers must therefore compare signatures slot by
+  * slot, never the array as a whole, if `hs` can be NULL; today's
+  * consumers index the array first, so both spellings band the same
+  * (MinHashAggSpec pins both behaviours). Arithmetic is the same
+  * overflow-safe affine mod-P over longs the DuckDB oracle embeds
+  * ([[TextHash.minhashSql]]). */
 case class GraftMinhashSig(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = true)

@@ -694,34 +694,35 @@ object StreamOps {
 
   /** Run `body` (which starts and drains a streaming query) with the
     * session's shuffle-partition count — which Structured Streaming
-    * latches at query start as its STATE-STORE partition count — set to
-    * `spark.graft.streamStatePartitions` (default 8), and AQE off,
-    * restoring both previous values after. Why the width: per-micro-batch
-    * cost at gate scale is dominated by per-partition state-store
-    * open/commit/maintenance (32 stores × 6 batches of file ops for a
-    * 150-key state), not by data — measured 2× on the sessionize gate and
-    * 2.5× on conversionLag at sf0.1 (9.4 → 5.2 s, 8.8 → 3.5 s medians).
-    * At production scale the knob RISES with the keyspace (state
-    * partitions bound stateful parallelism and per-store memory); it
-    * exists because the right number tracks the state's keyspace, not the
-    * batch engine's shuffle width. Why AQE off: a chain's maintenance
-    * batch is a LATENCY-bound sequence of small plans (screen → ledger
-    * write → fold write), and AQE turns every Exchange into its own
-    * materialized query stage — a separate job plus a driver
-    * re-optimization pause (the dedup chain measured 75 jobs/run with AQE
-    * vs 33 without); turning it back on measured neutral at widths 4 and
-    * 32, so it is not a knob.
+    * latches at query start as its STATE-STORE partition count and
+    * records in the checkpoint's offset log — set to
+    * [[VersionChain.widthFor]] of the bytes under `inputs`, the paths
+    * the run reads, and AQE off, restoring both previous values after.
+    * Why derived from the input: per-micro-batch cost at gate scale is
+    * dominated by per-partition state-store open/commit/maintenance and
+    * per-task scheduling, not by data (stream_ingest ran 107 tasks a
+    * pass at a fixed 8 and runs 29 at width 1), while at scale the width
+    * must still grow with the state; the state a run builds is bounded
+    * by what it reads, so ⌈input bytes / 64 MB⌉ is one partition at gate
+    * scale whatever the core count and one per 64 MB beyond. Why AQE
+    * off: a chain's maintenance batch is a LATENCY-bound sequence of
+    * small plans (screen → ledger write → fold write), and AQE turns
+    * every Exchange into its own materialized query stage — a separate
+    * job plus a driver re-optimization pause (the dedup chain measured
+    * 75 jobs/run with AQE vs 33 without); turning it back on measured
+    * neutral at widths 4 and 32, so it is not a knob.
     *
     * Both settings are SESSION-global: this assumes one thread plans
     * queries on the session while `body` runs. Its callers are
     * [[VersionChain.run]] and the three memory-sink gates. */
-  private[streaming] def withStatePartitions[T](s: SparkSession)(
-      body: => T): T = {
+  private[streaming] def withStatePartitions[T](s: SparkSession,
+      inputs: Seq[String])(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val aqeKey = "spark.sql.adaptive.enabled"
     val prev = s.conf.get(key)
     val prevAqe = s.conf.get(aqeKey)
-    s.conf.set(key, s.conf.get("spark.graft.streamStatePartitions", "8"))
+    s.conf.set(key,
+      VersionChain.widthFor(VersionChain.bytesUnder(s, inputs)).toString)
     s.conf.set(aqeKey, "false")
     try body finally {
       s.conf.set(key, prev)
@@ -736,7 +737,13 @@ object StreamOps {
     * table, and clean up. Hygiene is exception-safe (ADVICE r10 #2/#3):
     * the temp view is dropped and the checkpoint deleted in `finally`,
     * so a failed `processAllAvailable` neither accumulates session
-    * tables across retries nor grows the scratch root. */
+    * tables across retries nor grows the scratch root. Callers run it
+    * inside [[withStatePartitions]], and the snapshot takes that
+    * scope's width: a memory table scans as defaultParallelism slices,
+    * so a KB-scale settled table would otherwise cost one task per core
+    * in every job that reads it. `coalesce` suffices here: the rows are
+    * already materialized, so there is no upstream compute for it to
+    * serialize. */
   private def runToMemorySink(frame: DataFrame,
       mode: OutputMode): DataFrame = {
     val s = frame.sparkSession
@@ -747,7 +754,8 @@ object StreamOps {
       val q = frame.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt).outputMode(mode).start()
       try q.processAllAvailable() finally q.stop()
-      s.table(name).localCheckpoint(true)
+      s.table(name).coalesce(s.sessionState.conf.numShufflePartitions)
+        .localCheckpoint(true)
     } finally {
       s.catalog.dropTempView(name)
       VersionChain.delete(s, ckpt)
@@ -797,14 +805,13 @@ object StreamOps {
       else s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
     val ev = graft.io.Tables.normalizeTs(src)
-    // withStatePartitions (r15): this was the one stateful gate still
-    // latching the session's full shuffle width as its state-store
-    // count — 32 stores × 6 batches of open/commit for a #hours×#types
-    // state (JobProfile: one 0.76 s 33-task batch job dominated the
-    // run); the 8-partition sizing rationale is withStatePartitions'.
-    val out = withStatePartitions(s)(
-      runToMemorySink(hourlyCounts(ev), OutputMode.Complete()))
-      .orderBy("hour_start", "event_type").localCheckpoint(true)
+    // the state-store count and the result's sort width come from the
+    // events bytes, not the session's shuffle width (at 32 that was 32
+    // stores × 6 batches of open/commit for a #hours×#types state); the
+    // rule is withStatePartitions'
+    val out = withStatePartitions(s, Seq(evPath))(
+      runToMemorySink(hourlyCounts(ev), OutputMode.Complete())
+        .orderBy("hour_start", "event_type").localCheckpoint(true))
     // an empty settled table means the source listed no files (the
     // dir/glob mismatch above) — fail loudly, never time a no-op
     require(!out.isEmpty,
@@ -1082,7 +1089,7 @@ object StreamOps {
       val sp = statefulSplit(s, d)
       val evs = statefulStream(s, sp)
         .select(col("user_id"), col("event_id"), col("ts")).as[Ev]
-      val out = withStatePartitions(s)(runToMemorySink(
+      val out = withStatePartitions(s, Seq(sp.path))(runToMemorySink(
         sessionize(evs, gapMinutes = 30, watermarkDelay = sp.watermark)
           .toDF(), OutputMode.Append()))
       out.filter(col("user_id") >= 0)
@@ -1124,7 +1131,7 @@ object StreamOps {
       val sp = statefulSplit(s, d)
       val evs = statefulStream(s, sp)
         .select(col("user_id"), col("event_type"), col("ts")).as[TypedEv]
-      val out = withStatePartitions(s)(runToMemorySink(
+      val out = withStatePartitions(s, Seq(sp.path))(runToMemorySink(
         conversionLag(evs, watermarkDelay = sp.watermark,
           gcMinutes = 366 * 24 * 60).toDF(), OutputMode.Append()))
       out.filter(col("user_id") >= 0)
@@ -1216,8 +1223,8 @@ object StreamOps {
       // consumed twice (ledger write + survivor fold); LAZY (r14): the
       // ledger write materializes the blocks, the fold reuses them
       .localCheckpoint(false)
-    c.commit(batchId, Some(prev), VersionChain.Side("b",
-        verdicts.withColumn("batch", lit(batchId)))) {
+    c.commit(batchId, Some(prev), VersionChain.Side.ledger(
+        verdicts.withColumn("batch", lit(batchId)), batch)) {
       val survivors = verdicts.filter(!col("is_dup")).select("doc_id")
       val folded = standing
         .unionByName(bands.join(survivors, Seq("doc_id"), "left_semi"))
@@ -1621,10 +1628,10 @@ object StreamOps {
     val (cells, cents) = retrained.getOrElse((folded, quant))
     val width = prevW.map(w =>
       if (retrained.isEmpty) w else sim.calibratedLloydWidth(cells, cents))
-    val sides = VersionChain.Side("q", cents.toDF("cl", "m"),
-        Some(cents.size.toLong)) +:
+    val sides = VersionChain.Side.ofRows("q", cents.toDF("cl", "m"),
+        cents.size.toLong) +:
       width.toSeq.map(w =>
-        VersionChain.Side("p", Seq(w.toLong).toDF("w"), Some(1L)))
+        VersionChain.Side.ofRows("p", Seq(w.toLong).toDF("w"), 1L))
     c.commit(batchId, Some(prev), sides: _*)(cells)
   }
 
@@ -2097,8 +2104,8 @@ object StreamOps {
       bhashes.select(col("img_id").as("bi")),
       mm.imgBandRows(bhashes), mm.imgBandRows(index), bhashes, index)
       .localCheckpoint(true) // ledger write + survivor fold
-    c.commit(batchId, Some(prev), VersionChain.Side("b",
-        verdicts.withColumn("batch", lit(batchId)))) {
+    c.commit(batchId, Some(prev), VersionChain.Side.ledger(
+        verdicts.withColumn("batch", lit(batchId)), batch)) {
       val survivors = verdicts.filter(!col("is_dup"))
         .select(col("bi").as("img_id"))
       index.unionByName(bhashes.join(survivors, Seq("img_id"), "left_semi"))

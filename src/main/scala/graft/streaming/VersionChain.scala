@@ -66,19 +66,19 @@ private[graft] final class VersionChain(s: SparkSession, val state: String,
   /** Commit batch `batchId`'s output: the `sides` in order, then `next`
     * as `v=out` — the marker. `next` is by-name, so whatever computing it
     * runs happens after the sides are written. Writes are sized by the
-    * bytes of the predecessor version `from`; a side with `rows` is
-    * sized by its row count instead. */
+    * bytes of the predecessor version `from`; a side with a `width` is
+    * written at that width instead. */
   def commit(batchId: Long, from: Option[Long], sides: Side*)(
       next: => DataFrame): Unit = {
-    val src = from.toSeq.map(v => new Path(path("v", v)))
+    val fromWidth = widthFor(bytesUnder(s, from.toSeq.map(path("v", _))))
     sides.foreach { sd =>
       val dst =
         if (sd.kind == "b") s"$verd/b=$batchId"
         else path(sd.kind, out(batchId))
-      sd.rows.fold(sizedForState(sd.frame, fs, src))(sizedByRows(sd.frame, _))
+      sd.frame.repartition(sd.width.getOrElse(fromWidth))
         .write.mode("overwrite").parquet(dst)
     }
-    sizedForState(next, fs, src).write.mode("overwrite")
+    next.repartition(fromWidth).write.mode("overwrite")
       .parquet(path("v", out(batchId)))
   }
 
@@ -109,9 +109,30 @@ private[graft] final class VersionChain(s: SparkSession, val state: String,
 
 private[graft] object VersionChain {
 
-  /** A side artifact of a version (see [[VersionChain.commit]]). */
+  /** A side artifact of a version (see [[VersionChain.commit]]),
+    * written at `width` partitions, by default the predecessor
+    * version's. */
   final case class Side(kind: String, frame: DataFrame,
-      rows: Option[Long] = None)
+      width: Option[Int] = None)
+
+  object Side {
+
+    /** A side whose row count is already a driver scalar (quantizer
+      * matrices, the 1-row width — a k-row `Seq(...).toDF` otherwise
+      * writes defaultParallelism near-empty files): one partition per
+      * 64 Ki rows, the FrameMemo RowsPerPartition sizing. */
+    def ofRows(kind: String, frame: DataFrame, rows: Long): Side =
+      Side(kind, frame, Some(math.max(1L, (rows + 65535) / 65536)
+        .min(1 << 20).toInt))
+
+    /** Micro-batch `batch`'s verdict ledger `b=`. A ledger holds one
+      * verdict per batch item, so it is sized by the batch's own input
+      * bytes ([[inputBytes]]), not by the state it was screened against:
+      * a large index must not fan a tiny ledger out, nor a small one
+      * squeeze a large batch. */
+    def ledger(frame: DataFrame, batch: DataFrame): Side =
+      Side("b", frame, Some(widthFor(inputBytes(batch))))
+  }
 
   /** One chain's domain: the scratch-dir name, the file split it
     * streams (one micro-batch per file), the seed written before the
@@ -140,9 +161,11 @@ private[graft] object VersionChain {
     * that batch commits sink-side, then checked torn and handed to
     * `afterCrash`), a final leg resuming from the same checkpoint, a
     * check that every batch of a seeded chain committed its version
-    * (a bucketed merge keeps its versions per bucket), then `result` — all
-    * inside one [[StreamOps.withStatePartitions]] scope, with the dirs
-    * deleted in `finally`. `result` must materialize what it returns. */
+    * (a bucketed merge keeps its versions per bucket), then `result`,
+    * with the dirs deleted in `finally`. `result` must materialize what
+    * it returns. The seed runs in a [[StreamOps.withStatePartitions]]
+    * scope sized by the split it streams; the legs and `result` in one
+    * sized by the split plus the seed's committed `v=0`. */
   def run[T](s: SparkSession, spec: Spec, crashes: Seq[Long] = Nil,
       afterCrash: (VersionChain, Long) => Unit = (_, _) => ())(
       result: VersionChain => T): T = {
@@ -151,26 +174,29 @@ private[graft] object VersionChain {
     def dir(kind: String) = s"$root/graft_${spec.name}_${kind}_$runId"
     val c = new VersionChain(s, dir("state"), dir("verd"), dir("ckpt"),
       spec.seeded)
-    try StreamOps.withStatePartitions(s) {
-      spec.seed(c)
-      crashes.foreach { k =>
-        leg(s, spec, c, Some(k))
-        require(c.committed.lastOption.contains(c.out(k)) &&
-          !hadoopFs(s, c.ckpt).exists(new Path(s"${c.ckpt}/commits/$k")),
-          s"${spec.name}: the crash after batch $k must leave its version " +
-            "sink-committed, the tail unrun and the batch " +
-            "checkpoint-uncommitted")
-        afterCrash(c, k)
+    try {
+      StreamOps.withStatePartitions(s, Seq(spec.src))(spec.seed(c))
+      StreamOps.withStatePartitions(s,
+        spec.src +: c.committed.map(c.path("v", _))) {
+        crashes.foreach { k =>
+          leg(s, spec, c, Some(k))
+          require(c.committed.lastOption.contains(c.out(k)) &&
+            !hadoopFs(s, c.ckpt).exists(new Path(s"${c.ckpt}/commits/$k")),
+            s"${spec.name}: the crash after batch $k must leave its " +
+              "version sink-committed, the tail unrun and the batch " +
+              "checkpoint-uncommitted")
+          afterCrash(c, k)
+        }
+        leg(s, spec, c, None)
+        if (spec.seeded) {
+          val batches = hadoopFs(s, spec.src).listStatus(new Path(spec.src))
+            .count(_.getPath.getName.endsWith(".parquet"))
+          require(c.committed.lastOption.contains(c.out(batches - 1L)),
+            s"${spec.name}: expected $batches committed batches, newest " +
+              s"version ${c.committed.lastOption}")
+        }
+        result(c)
       }
-      leg(s, spec, c, None)
-      if (spec.seeded) {
-        val batches = hadoopFs(s, spec.src).listStatus(new Path(spec.src))
-          .count(_.getPath.getName.endsWith(".parquet"))
-        require(c.committed.lastOption.contains(c.out(batches - 1L)),
-          s"${spec.name}: expected $batches committed batches, newest " +
-            s"version ${c.committed.lastOption}")
-      }
-      result(c)
     } finally for (p <- Seq(c.state, c.verd, c.ckpt)) delete(s, p)
   }
 
@@ -216,40 +242,49 @@ private[graft] object VersionChain {
       .filter(st => fs.exists(new Path(st.getPath, "_SUCCESS")))
       .map(_.getPath.getName.drop(2).toLong)
 
-  /** Target bytes per state-version output file. */
-  private val StateFileBytes = 64L * 1024 * 1024
+  /** Target bytes per state-version output file, and per shuffle and
+    * state-store partition of a stream run. */
+  private[graft] val StateFileBytes = 64L * 1024 * 1024
 
-  /** Output-file sizing for a state-version write (guide §6 "sensible
-    * output file sizing" / small-files): the write repartitions to
-    * ⌈source bytes / [[StateFileBytes]]⌉ partitions, where the source
-    * bytes are the on-disk length of the version the write derives
-    * from — one driver-side ContentSummary call, no extra Spark job.
-    * Why: every state version was written at the session's shuffle
-    * width, so a ~KB state became 8-16 near-empty files that every later
-    * read re-split into 8-16 tasks. Bytes-derived, not a constant: a
-    * TB-scale state still writes one file per 64 MB.
+  /** The streaming layer's one width rule: ⌈`bytes` / [[StateFileBytes]]⌉
+    * partitions, at least 1 and at most `1 << 20`. It sizes every state
+    * and ledger write ([[commit]]) and every stream run's shuffle and
+    * state-store width ([[StreamOps.withStatePartitions]]). Derived from
+    * the bytes, not a constant: a KB-scale state is one partition, not
+    * 8-32 near-empty ones that every later read re-splits into as many
+    * tasks; a TB-scale state still gets one partition per 64 MB.
     *
-    * `repartition`, NOT `coalesce`: coalesce is NARROW, so coalesce(1)
-    * folds every narrow ancestor — including LAZY localCheckpoint
-    * blocks, which materialize inside the consuming job — into the
-    * single write task, serializing the chain's whole screen/banding/
-    * assignment compute (measured: the ANN chains nondeterministically
-    * ran 2-3× their medians). The repartition exchange keeps upstream
-    * compute at its natural width and moves only the KB-scale result to
-    * the one writer. */
-  private def sizedForState(df: DataFrame, fs: FileSystem,
-      sources: Seq[Path]): DataFrame = {
-    val bytes = sources.filter(fs.exists)
-      .map(p => fs.getContentSummary(p).getLength).sum
-    df.repartition(math.max(1L, (bytes + StateFileBytes - 1) / StateFileBytes)
-      .min(1 << 20).toInt)
-  }
+    * Writes apply it with `repartition`, NOT `coalesce`: coalesce is
+    * NARROW, so coalesce(1) folds every narrow ancestor — including LAZY
+    * localCheckpoint blocks, which materialize inside the consuming job
+    * — into the single write task, serializing the chain's whole
+    * screen/banding/assignment compute (measured: the ANN chains
+    * nondeterministically ran 2-3× their medians). The repartition
+    * exchange keeps upstream compute at its natural width and moves only
+    * the KB-scale result to the one writer. */
+  private[graft] def widthFor(bytes: Long): Int =
+    if (bytes <= 0L) 1
+    else ((bytes - 1) / StateFileBytes + 1).min(1L << 20).toInt
 
-  /** Row-count flavor of [[sizedForState]] for writes whose row count is
-    * already a driver scalar (quantizer matrices, the 1-row width — a
-    * k-row `Seq(...).toDF` otherwise writes defaultParallelism near-empty
-    * files): one output partition per 64 Ki rows, the FrameMemo
-    * RowsPerPartition sizing. */
-  private def sizedByRows(df: DataFrame, rows: Long): DataFrame =
-    df.repartition(math.max(1L, (rows + 65535) / 65536).min(1 << 20).toInt)
+  /** On-disk bytes under `paths`, files or directories (a missing path
+    * counts 0): one driver-side ContentSummary call each, no Spark job. */
+  private[streaming] def bytesUnder(s: SparkSession,
+      paths: Seq[String]): Long =
+    paths.map { p =>
+      val fs = hadoopFs(s, p)
+      val path = new Path(p)
+      if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+    }.sum
+
+  /** A micro-batch's input bytes, read from its plan on the driver (no
+    * job). A foreachBatch frame is a `LogicalRDD` over the already
+    * planned batch, so `inputFiles` lists nothing; it carries its source
+    * relation's statistics instead, which for a file source are the
+    * bytes of the files the batch reads. A plan without statistics
+    * reports `spark.sql.defaultSizeInBytes` and counts as 0. */
+  private[graft] def inputBytes(batch: DataFrame): Long = {
+    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes >= batch.sparkSession.sessionState.conf.defaultSizeInBytes) 0L
+    else bytes.toLong
+  }
 }

@@ -39,6 +39,8 @@ class MinHashAggSpec extends SparkSpec {
       // plant the <3-token case: an EMPTY shingle set must yield a
       // 16-slot all-null signature in both spellings
       .unionByName(Seq((-1L, Seq.empty[Long])).toDF("doc_id", "hs"))
+      // and a NULL shingle set, where the two spellings differ
+      .unionByName(Seq((-2L, Option.empty[Seq[Long]])).toDF("doc_id", "hs"))
     val composed = sh.select(col("doc_id"),
       array((0 until TextHash.K).map(k =>
         TextHash.minhash(col("hs"), k)): _*).as("sig"))
@@ -47,10 +49,20 @@ class MinHashAggSpec extends SparkSpec {
     val diverged = composed.as("a")
       .join(fused.as("b"), col("a.doc_id") === col("b.doc_id"))
       .filter(!(col("a.sig") <=> col("b.sig")))
-    assert(diverged.count() == 0)
+    assert(diverged.select(col("a.doc_id")).collect().map(_.getLong(0))
+      .toSeq == Seq(-2L), "only the NULL-hs row may diverge")
     val empty = fused.filter(col("doc_id") === -1L)
       .select(explode(col("sig"))).collect()
     assert(empty.length == TextHash.K && empty.forall(_.isNullAt(0)),
       "empty shingle set must produce K null slots")
+    // NULL hs: the kernel returns a NULL signature, the composed form a
+    // non-null array of K null slots (array() of K NULL array_mins)
+    assert(fused.filter(col("doc_id") === -2L).head().isNullAt(1),
+      "the kernel must map a NULL shingle set to a NULL signature")
+    val composedNull = composed.filter(col("doc_id") === -2L)
+      .select(explode(col("sig"))).collect()
+    assert(composedNull.length == TextHash.K &&
+      composedNull.forall(_.isNullAt(0)),
+      "the composed spelling must map a NULL shingle set to K null slots")
   }
 }

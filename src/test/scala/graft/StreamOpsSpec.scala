@@ -1285,6 +1285,57 @@ class StreamOpsSpec extends SparkSpec {
     } finally spark.conf.unset("spark.graft.scratchRoot")
   }
 
+  test("stream width rule: ⌈bytes / 64 MB⌉, floor 1, capped at 1 << 20") {
+    val mb64 = VersionChain.StateFileBytes
+    assert(mb64 == 64L * 1024 * 1024)
+    assert(VersionChain.widthFor(0L) == 1)
+    assert(VersionChain.widthFor(mb64) == 1)
+    assert(VersionChain.widthFor(mb64 + 1) == 2)
+    assert(VersionChain.widthFor(mb64 << 20) == (1 << 20))
+    assert(VersionChain.widthFor((mb64 << 20) + 1) == (1 << 20))
+    assert(VersionChain.widthFor(Long.MaxValue) == (1 << 20))
+  }
+
+  test("a chain run's state width is derived from its input, not the " +
+    "session width, and the session conf is restored") {
+    val sf01 = new java.io.File(sf001).getParent + "/sf0.01"
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val before = keys.map(spark.conf.get)
+    // the latched width: the offset log's batch metadata carries the
+    // streaming query's session conf
+    def latched(c: VersionChain): Set[String] =
+      new java.io.File(s"${c.ckpt}/offsets").listFiles().toSeq
+        .filter(_.getName.forall(_.isDigit)).map { f =>
+          val log = new String(java.nio.file.Files.readAllBytes(f.toPath),
+            java.nio.charset.StandardCharsets.UTF_8)
+          "\"spark\\.sql\\.shuffle\\.partitions\":\"(\\d+)\"".r
+            .findFirstMatchIn(log).map(_.group(1))
+            .getOrElse(fail(s"no shuffle width in offset log ${f.getName}"))
+        }.toSet
+    try for (width <- Seq("8", "32")) {
+      spark.conf.set("spark.sql.shuffle.partitions", width)
+      val seen = VersionChain.run(spark, StreamOps.annChain(spark, sf01))(
+        latched)
+      assert(seen == Set("1"), s"session width $width latched $seen")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == width)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before.head)
+    assert(keys.map(spark.conf.get) == before)
+  }
+
+  test("a micro-batch's input bytes are its own file's bytes") {
+    val ann = StreamOps.annChain(spark, sf001)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+    VersionChain.run(spark, ann.copy(step = (c, batch, id) => {
+      seen.add(VersionChain.inputBytes(batch))
+      ann.step(c, batch, id)
+    }))(_ => ())
+    val files = new java.io.File(ann.src).listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).map(_.length)
+    import scala.jdk.CollectionConverters._
+    assert(files.forall(_ > 0) && seen.asScala.toSet == files.toSet,
+      s"batches read $seen, split files are $files")
+  }
+
   test("stateful split: 6 ordered files, out-of-order delivery, no row " +
     "lost, sentinels last") {
     val sp = StreamOps.statefulSplit(spark, sf001)
