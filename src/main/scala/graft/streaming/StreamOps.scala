@@ -698,19 +698,21 @@ object StreamOps {
     * records in the checkpoint's offset log — set to
     * [[VersionChain.widthFor]] of the bytes under `inputs`, the paths
     * the run reads, and AQE off, restoring both previous values after.
-    * Why derived from the input: per-micro-batch cost at gate scale is
-    * dominated by per-partition state-store open/commit/maintenance and
-    * per-task scheduling, not by data (stream_ingest ran 107 tasks a
-    * pass at a fixed 8 and runs 29 at width 1), while at scale the width
-    * must still grow with the state; the state a run builds is bounded
-    * by what it reads, so ⌈input bytes / 64 MB⌉ is one partition at gate
-    * scale whatever the core count and one per 64 MB beyond. Why AQE
-    * off: a chain's maintenance batch is a LATENCY-bound sequence of
-    * small plans (screen → ledger write → fold write), and AQE turns
-    * every Exchange into its own materialized query stage — a separate
-    * job plus a driver re-optimization pause (the dedup chain measured
-    * 75 jobs/run with AQE vs 33 without); turning it back on measured
-    * neutral at widths 4 and 32, so it is not a knob.
+    * Why derived from the input: at gate scale the per-micro-batch cost
+    * is per-partition state-store open/commit and per-task scheduling,
+    * not data, so a width set by a constant or the core count is
+    * overhead; ⌈input bytes / 64 MB⌉ is 1 there whatever the core count.
+    * The input bytes bound what a run shuffles, not always the state it
+    * keeps: `q_stream_hourly`'s state is #hours × #types whatever the
+    * events volume, so past 64 MB of events it gets more stores than
+    * its state needs. No workload measured so far (sf0.01, sf0.1)
+    * reaches a width above 1. Why AQE off: a chain's maintenance batch
+    * is a LATENCY-bound sequence of small plans (screen → ledger write
+    * → fold write), and AQE turns every Exchange into its own
+    * materialized query stage — a separate job plus a driver
+    * re-optimization pause (the dedup chain measured 75 jobs/run with
+    * AQE vs 33 without); turning it back on measured neutral at widths
+    * 4 and 32, so it is not a knob.
     *
     * Both settings are SESSION-global: this assumes one thread plans
     * queries on the session while `body` runs. Its callers are
@@ -805,10 +807,7 @@ object StreamOps {
       else s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
     val ev = graft.io.Tables.normalizeTs(src)
-    // the state-store count and the result's sort width come from the
-    // events bytes, not the session's shuffle width (at 32 that was 32
-    // stores × 6 batches of open/commit for a #hours×#types state); the
-    // rule is withStatePartitions'
+    // state-store and sort width: see withStatePartitions
     val out = withStatePartitions(s, Seq(evPath))(
       runToMemorySink(hourlyCounts(ev), OutputMode.Complete())
         .orderBy("hour_start", "event_type").localCheckpoint(true))
@@ -1223,8 +1222,8 @@ object StreamOps {
       // consumed twice (ledger write + survivor fold); LAZY (r14): the
       // ledger write materializes the blocks, the fold reuses them
       .localCheckpoint(false)
-    c.commit(batchId, Some(prev), VersionChain.Side.ledger(
-        verdicts.withColumn("batch", lit(batchId)), batch)) {
+    c.commit(batchId, Some(prev), VersionChain.Side("b",
+        verdicts.withColumn("batch", lit(batchId)))) {
       val survivors = verdicts.filter(!col("is_dup")).select("doc_id")
       val folded = standing
         .unionByName(bands.join(survivors, Seq("doc_id"), "left_semi"))
@@ -1263,7 +1262,8 @@ object StreamOps {
           base.withColumn("nb", lit(graft.functions.TextHash.Bands))))
       },
       (c, batch, batchId) =>
-        applyIngestBatch(c, batch, batchId, corpusSh, retune))
+        applyIngestBatch(c, batch, batchId, corpusSh, retune),
+      seedReads = Seq(s"$d/documents.parquet"))
   }
 
   /** The committed verdict ledger across all [[IngestSlices]] batches —
@@ -1500,7 +1500,8 @@ object StreamOps {
     val anchors = sim.ivfAnchors(s, d).localCheckpoint(true)
     VersionChain.Spec("annidx", src,
       _.seed(sim.ivfBaseCells(s, d, AnnIngestSlices)),
-      (c, batch, batchId) => applyAnnIngestBatch(c, batch, batchId, anchors))
+      (c, batch, batchId) => applyAnnIngestBatch(c, batch, batchId, anchors),
+      seedReads = Seq(s"$d/embeddings.parquet"))
   }
 
   /** Streaming CONTINUOUS-INGEST for the IVF index — the embedding-side
@@ -1628,10 +1629,10 @@ object StreamOps {
     val (cells, cents) = retrained.getOrElse((folded, quant))
     val width = prevW.map(w =>
       if (retrained.isEmpty) w else sim.calibratedLloydWidth(cells, cents))
-    val sides = VersionChain.Side.ofRows("q", cents.toDF("cl", "m"),
-        cents.size.toLong) +:
+    val sides = VersionChain.Side("q", cents.toDF("cl", "m"),
+        Some(cents.size.toLong)) +:
       width.toSeq.map(w =>
-        VersionChain.Side.ofRows("p", Seq(w.toLong).toDF("w"), 1L))
+        VersionChain.Side("p", Seq(w.toLong).toDF("w"), Some(1L)))
     c.commit(batchId, Some(prev), sides: _*)(cells)
   }
 
@@ -1660,7 +1661,7 @@ object StreamOps {
       } else c.seed(assigned)
     }, (c, batch, batchId) =>
       applyLloydBatch(c, batch, batchId, calibrate, maintainAfter)(
-        retrainSeed))
+        retrainSeed), seedReads = Seq(s"$d/embeddings.parquet"))
   }
 
   /** The RETRAIN chain: seed quantizer = the codes of the base's
@@ -2104,8 +2105,8 @@ object StreamOps {
       bhashes.select(col("img_id").as("bi")),
       mm.imgBandRows(bhashes), mm.imgBandRows(index), bhashes, index)
       .localCheckpoint(true) // ledger write + survivor fold
-    c.commit(batchId, Some(prev), VersionChain.Side.ledger(
-        verdicts.withColumn("batch", lit(batchId)), batch)) {
+    c.commit(batchId, Some(prev), VersionChain.Side("b",
+        verdicts.withColumn("batch", lit(batchId)))) {
       val survivors = verdicts.filter(!col("is_dup"))
         .select(col("bi").as("img_id"))
       index.unionByName(bhashes.join(survivors, Seq("img_id"), "left_semi"))
@@ -2120,7 +2121,7 @@ object StreamOps {
     val mm = graft.multimodal.Multimodal
     VersionChain.Spec("imging", imgSplit(s, d),
       _.seed(mm.imgHashes(s, d).filter(col("variant") === 0)),
-      applyImageIngestBatch)
+      applyImageIngestBatch, seedReads = Seq(s"$d/documents.parquet"))
   }
 
   /** From-scratch two-phase admission oracle for the image chain: the

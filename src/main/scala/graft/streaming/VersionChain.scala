@@ -66,19 +66,19 @@ private[graft] final class VersionChain(s: SparkSession, val state: String,
   /** Commit batch `batchId`'s output: the `sides` in order, then `next`
     * as `v=out` — the marker. `next` is by-name, so whatever computing it
     * runs happens after the sides are written. Writes are sized by the
-    * bytes of the predecessor version `from`; a side with a `width` is
-    * written at that width instead. */
+    * bytes of the predecessor version `from` ([[widthFor]]); a side with
+    * `rows` is sized by its row count instead. */
   def commit(batchId: Long, from: Option[Long], sides: Side*)(
       next: => DataFrame): Unit = {
-    val fromWidth = widthFor(bytesUnder(s, from.toSeq.map(path("v", _))))
+    val width = widthFor(bytesUnder(s, from.toSeq.map(path("v", _))))
     sides.foreach { sd =>
       val dst =
         if (sd.kind == "b") s"$verd/b=$batchId"
         else path(sd.kind, out(batchId))
-      sd.frame.repartition(sd.width.getOrElse(fromWidth))
+      sd.rows.fold(sd.frame.repartition(width))(sizedByRows(sd.frame, _))
         .write.mode("overwrite").parquet(dst)
     }
-    next.repartition(fromWidth).write.mode("overwrite")
+    next.repartition(width).write.mode("overwrite")
       .parquet(path("v", out(batchId)))
   }
 
@@ -109,38 +109,18 @@ private[graft] final class VersionChain(s: SparkSession, val state: String,
 
 private[graft] object VersionChain {
 
-  /** A side artifact of a version (see [[VersionChain.commit]]),
-    * written at `width` partitions, by default the predecessor
-    * version's. */
+  /** A side artifact of a version (see [[VersionChain.commit]]). */
   final case class Side(kind: String, frame: DataFrame,
-      width: Option[Int] = None)
-
-  object Side {
-
-    /** A side whose row count is already a driver scalar (quantizer
-      * matrices, the 1-row width — a k-row `Seq(...).toDF` otherwise
-      * writes defaultParallelism near-empty files): one partition per
-      * 64 Ki rows, the FrameMemo RowsPerPartition sizing. */
-    def ofRows(kind: String, frame: DataFrame, rows: Long): Side =
-      Side(kind, frame, Some(math.max(1L, (rows + 65535) / 65536)
-        .min(1 << 20).toInt))
-
-    /** Micro-batch `batch`'s verdict ledger `b=`. A ledger holds one
-      * verdict per batch item, so it is sized by the batch's own input
-      * bytes ([[inputBytes]]), not by the state it was screened against:
-      * a large index must not fan a tiny ledger out, nor a small one
-      * squeeze a large batch. */
-    def ledger(frame: DataFrame, batch: DataFrame): Side =
-      Side("b", frame, Some(widthFor(inputBytes(batch))))
-  }
+      rows: Option[Long] = None)
 
   /** One chain's domain: the scratch-dir name, the file split it
     * streams (one micro-batch per file), the seed written before the
-    * stream starts, and the per-batch step. */
+    * stream starts, the per-batch step, and the tables the seed reads
+    * (`seedReads`, which size the seed's width). */
   final case class Spec(name: String, src: String,
       seed: VersionChain => Unit,
       step: (VersionChain, DataFrame, Long) => Unit,
-      seeded: Boolean = true)
+      seeded: Boolean = true, seedReads: Seq[String] = Nil)
 
   /** Deliberate mid-chain crash: thrown after the designated batch's
     * writes commit but BEFORE the runtime records the batch in the
@@ -164,7 +144,7 @@ private[graft] object VersionChain {
     * (a bucketed merge keeps its versions per bucket), then `result`,
     * with the dirs deleted in `finally`. `result` must materialize what
     * it returns. The seed runs in a [[StreamOps.withStatePartitions]]
-    * scope sized by the split it streams; the legs and `result` in one
+    * scope sized by the tables it reads; the legs and `result` in one
     * sized by the split plus the seed's committed `v=0`. */
   def run[T](s: SparkSession, spec: Spec, crashes: Seq[Long] = Nil,
       afterCrash: (VersionChain, Long) => Unit = (_, _) => ())(
@@ -175,7 +155,7 @@ private[graft] object VersionChain {
     val c = new VersionChain(s, dir("state"), dir("verd"), dir("ckpt"),
       spec.seeded)
     try {
-      StreamOps.withStatePartitions(s, Seq(spec.src))(spec.seed(c))
+      StreamOps.withStatePartitions(s, spec.seedReads)(spec.seed(c))
       StreamOps.withStatePartitions(s,
         spec.src +: c.committed.map(c.path("v", _))) {
         crashes.foreach { k =>
@@ -276,15 +256,11 @@ private[graft] object VersionChain {
       if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
     }.sum
 
-  /** A micro-batch's input bytes, read from its plan on the driver (no
-    * job). A foreachBatch frame is a `LogicalRDD` over the already
-    * planned batch, so `inputFiles` lists nothing; it carries its source
-    * relation's statistics instead, which for a file source are the
-    * bytes of the files the batch reads. A plan without statistics
-    * reports `spark.sql.defaultSizeInBytes` and counts as 0. */
-  private[graft] def inputBytes(batch: DataFrame): Long = {
-    val bytes = batch.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes >= batch.sparkSession.sessionState.conf.defaultSizeInBytes) 0L
-    else bytes.toLong
-  }
+  /** Row-count flavor of [[widthFor]] for writes whose row count is
+    * already a driver scalar (quantizer matrices, the 1-row width — a
+    * k-row `Seq(...).toDF` otherwise writes defaultParallelism near-empty
+    * files): one output partition per 64 Ki rows, the FrameMemo
+    * RowsPerPartition sizing. */
+  private def sizedByRows(df: DataFrame, rows: Long): DataFrame =
+    df.repartition(math.max(1L, (rows + 65535) / 65536).min(1 << 20).toInt)
 }
