@@ -73,32 +73,51 @@ object GraphOps {
     * loop-join dispatch below reads, session-memoized as a 1-row frame
     * (every PageRank/BFS/k-core execution needs it; production keeps
     * graph cardinalities in catalog stats). Value-identical to the
-    * `n` scalar the rank recurrences already divide by. */
-  private def nodeCount(s: SparkSession, d: String): Long =
-    graft.plans.FrameMemo.memo(s, "graphNodeCount", d)(
+    * `n` scalar the rank recurrences already divide by. The value read
+    * off that frame is kept beside it, so only the first call per
+    * session runs a job. */
+  private def nodeCount(s: SparkSession, d: String): Long = {
+    val f = graft.plans.FrameMemo.memo(s, "graphNodeCount", d)(
       symEdges(s, d).select("src").distinct()
-        .agg(count(lit(1)).as("n"))).head().getLong(0)
+        .agg(count(lit(1)).as("n")))
+    Option(nodeCounts.synchronized(nodeCounts.get(f))).fold {
+      val n = f.head().getLong(0)
+      nodeCounts.synchronized(nodeCounts.put(f, n))
+      n
+    }(_.longValue)
+  }
 
-  /** Node-row ceiling under which the iterative loops BROADCAST their
-    * node-keyed side (ranks, labels, frontiers, survivor sets) instead
-    * of letting the planner shuffle-join it against the edge table
-    * (r15, guide §3.1 "broadcast the side that fits" + §2.4 "a
-    * broadcast join replaces a shuffle of the large side"): each loop
-    * round joins the LOOP-INVARIANT edge memo (~1.1 M rows at sf0.1)
-    * to a node-sized frame (~16 K rows), and because a checkpointed
-    * leaf carries no partitioning info, the planner re-shuffled BOTH
-    * sides every round — JobProfile measured 0.2-0.6 s 18-task jobs
-    * per round, all edge re-shuffle (the r14 "per-round edge
-    * re-shuffle" note). Broadcasting the node side keeps the edge memo
-    * unshuffled in every round; the post-join aggregate still reduces
-    * map-side. The dispatch is SCALE-ADAPTIVE, not a blanket hint
-    * (the r14 Lloyd literal-k-ceiling precedent): a node table at
-    * 100 TB graph scale does not fit an executor, so loops fall back
-    * to the planner's shuffle join above the ceiling. 2 M rows of
-    * (long, long) ≈ 64 MB framed — inside the guide's "a few hundred
-    * MB is usually fine", parameterized for bigger drivers. */
+  /** [[nodeCount]]'s values, weakly keyed by their memo frame, so an
+    * entry lives exactly as long as the frame it was read from. */
+  private val nodeCounts =
+    new java.util.WeakHashMap[DataFrame, java.lang.Long]()
+
+  /** Node-row ceiling for the iterative loops' node-keyed side (ranks,
+    * labels, frontiers, survivor sets). It has two uses:
+    *   - [[nodeSide]]: under it the loops BROADCAST that side instead of
+    *     letting the planner shuffle-join it against the edge table
+    *     (guide §3.1 "broadcast the side that fits" + §2.4 "a broadcast
+    *     join replaces a shuffle of the large side"). Each round joins
+    *     the LOOP-INVARIANT edge memo (~1.1 M rows at sf0.1) to a
+    *     node-sized frame (~16 K rows), and a checkpointed leaf carries
+    *     no partitioning info, so the planner re-shuffled BOTH sides
+    *     every round; broadcasting keeps the edge memo unshuffled.
+    *   - [[inMass]]: under it the PageRank-recurrence loops
+    *     ([[qPagerank]], [[qPprSeeds]], [[pagerankConverged]]) hold the
+    *     whole rank table on the driver between rounds. A broadcast
+    *     collects that table to the driver every round anyway, so
+    *     keeping it there needs no memory the broadcast did not.
+    * The dispatch is SCALE-ADAPTIVE, not a blanket hint: a node table at
+    * 100 TB graph scale does not fit one JVM, so above the ceiling the
+    * loops keep their DataFrame shuffle rounds. 2 M nodes are ≈ 32 MB
+    * as [[Ranks]] arrays and ≈ 64 MB as a framed broadcast relation —
+    * inside the guide's "a few hundred MB is usually fine",
+    * parameterized for bigger drivers. */
   private def graphBroadcastNodes(s: SparkSession): Long =
     s.conf.get("spark.graft.graphBroadcastNodes", "2000000").toLong
+
+  private def underCeiling(s: SparkSession, rows: Long): Boolean =
+    rows <= graphBroadcastNodes(s)
 
   /** The node-keyed loop side under the [[graphBroadcastNodes]]
     * dispatch: `rows` is a driver-known upper bound on `df`'s rows
@@ -106,21 +125,178 @@ object GraphOps {
     * loop already holds). */
   private def nodeSide(s: SparkSession, df: DataFrame,
       rows: Long): DataFrame =
-    if (rows <= graphBroadcastNodes(s)) broadcast(df) else df
+    if (underCeiling(s, rows)) broadcast(df) else df
+
+  /** A rank table held on the driver in two primitive arrays: `ids`
+    * ascending and `r(i)` the rank of `ids(i)` — 16 bytes a node, no
+    * per-node objects. A node outside `ids` ranks `absent`: −1 (ranks
+    * are non-negative) for "no row", or one shared value for the
+    * uniform r⁰, which therefore needs no node list and no job. */
+  private[graft] final case class Ranks(ids: Array[Long], r: Array[Long],
+      absent: Long = -1L) {
+
+    def of(node: Long): Long = {
+      val i = java.util.Arrays.binarySearch(ids, node)
+      if (i >= 0) r(i) else absent
+    }
+
+    def map(f: Long => Long): Ranks = Ranks(ids, r.map(f))
+
+    /** max |r − prev.r| over the nodes both tables rank, 0 if none —
+      * what the DataFrame rounds' delta join computes. */
+    def maxDelta(prev: Ranks): Long =
+      ids.indices.iterator.map(i => (r(i), prev.of(ids(i))))
+        .collect { case (a, b) if b >= 0 => math.abs(a - b) }
+        .foldLeft(0L)(math.max)
+
+    /** This table as a one-slice (node, r) frame, so a downstream
+      * select/orderBy/limit stays one task. The arrays reach the task
+      * as a broadcast, never as per-row driver objects. */
+    def toFrame(s: SparkSession): DataFrame = {
+      import s.implicits._
+      val b = s.sparkContext.broadcast(this)
+      s.sparkContext.parallelize(Seq(0), 1)
+        .flatMap { _ =>
+          val t = b.value
+          t.ids.indices.iterator.map(i => (t.ids(i), t.r(i)))
+        }
+        .toDF("node", "r")
+    }
+  }
+
+  private[graft] object Ranks {
+    def uniform(r: Long): Ranks =
+      Ranks(Array.emptyLongArray, Array.emptyLongArray, r)
+
+    /** The union of two tables' rows, ranks of shared nodes added. */
+    def merge(a: Ranks, b: Ranks): Ranks = {
+      val ids = new Array[Long](a.ids.length + b.ids.length)
+      val r = new Array[Long](ids.length)
+      var i = 0
+      var j = 0
+      var k = 0
+      while (i < a.ids.length || j < b.ids.length) {
+        if (j == b.ids.length ||
+            (i < a.ids.length && a.ids(i) < b.ids(j))) {
+          ids(k) = a.ids(i); r(k) = a.r(i); i += 1
+        } else if (i == a.ids.length || b.ids(j) < a.ids(i)) {
+          ids(k) = b.ids(j); r(k) = b.r(j); j += 1
+        } else {
+          ids(k) = a.ids(i); r(k) = a.r(i) + b.r(j); i += 1; j += 1
+        }
+        k += 1
+      }
+      Ranks(java.util.Arrays.copyOf(ids, k), java.util.Arrays.copyOf(r, k))
+    }
+  }
+
+  /** Long sums keyed by node id, for one edge partition of [[inMass]]:
+    * open addressing with linear probing over primitive arrays
+    * (power-of-two capacity, doubled at half full), so the per-edge
+    * loop boxes nothing. */
+  private final class NodeSums {
+    private var keys = new Array[Long](64)
+    private var sums = new Array[Long](64)
+    private var used = new Array[Boolean](64)
+    private var size = 0
+
+    private def slot(k: Long): Int = {
+      val mask = keys.length - 1
+      var i = java.lang.Long.hashCode(k * 0x9E3779B97F4A7C15L) & mask
+      while (used(i) && keys(i) != k) i = (i + 1) & mask
+      i
+    }
+
+    def add(k: Long, v: Long): Unit = {
+      if (2 * size >= keys.length) {
+        val (ks, vs, us) = (keys, sums, used)
+        keys = new Array[Long](ks.length * 2)
+        sums = new Array[Long](ks.length * 2)
+        used = new Array[Boolean](ks.length * 2)
+        for (i <- ks.indices if us(i)) {
+          val j = slot(ks(i))
+          keys(j) = ks(i); sums(j) = vs(i); used(j) = true
+        }
+      }
+      val i = slot(k)
+      if (!used(i)) { keys(i) = k; used(i) = true; size += 1 }
+      sums(i) += v
+    }
+
+    def table: Ranks = {
+      val ids = new Array[Long](size)
+      var k = 0
+      for (i <- keys.indices if used(i)) { ids(k) = keys(i); k += 1 }
+      java.util.Arrays.sort(ids)
+      Ranks(ids, ids.map(k => sums(slot(k))))
+    }
+  }
+
+  /** One PageRank round's in-mass: Σ_{u→v} ⌊r(u)/deg(u)⌋ for every dst
+    * v with at least one ranked src. Edges whose src has no rank add
+    * nothing — the inner join of the DataFrame rounds, which
+    * [[qPprSeeds]]' seed-only first round relies on.
+    *
+    * One job: the driver-held table goes out as a broadcast, one
+    * `mapPartitions` pass over the [[edgesWithDeg]] memo keeps per-dst
+    * partial sums, and `treeReduce` brings them back — no join
+    * shuffle, no AQE stage, no checkpoint. The job is a single stage
+    * while the memo has few partitions; over many, `treeReduce` adds a
+    * combine level so the driver never receives one partial per
+    * partition at the ceiling's 32 MB each. Callers apply their own
+    * affine step on the driver. All values are non-negative longs, so
+    * Scala's `/` is SQL's `div`, and with total mass 10¹² nothing
+    * overflows. Only for tables under [[graphBroadcastNodes]]. */
+  private[graft] def inMass(ec: DataFrame, ranks: Ranks): Ranks = {
+    val b = ec.sparkSession.sparkContext.broadcast(ranks)
+    try ec.select(col("src").cast("long"), col("dst").cast("long"),
+        col("d").cast("long"))
+      .queryExecution.toRdd
+      .mapPartitions { edges =>
+        val t = b.value
+        val sums = new NodeSums
+        edges.foreach { e =>
+          val ru = t.of(e.getLong(0))
+          if (ru >= 0) sums.add(e.getLong(1), ru / e.getLong(2))
+        }
+        Iterator.single(sums.table)
+      }
+      .treeReduce(Ranks.merge)
+    finally b.destroy()
+  }
+
+  /** One DataFrame PageRank round, for rank frames above the
+    * [[graphBroadcastNodes]] ceiling: base + ⌊85·Σ_{u→v}⌊r(u)/deg(u)⌋/100⌋
+    * per dst v, by an edge⋈rank shuffle join and a map-side-combinable
+    * sum. */
+  private def rankRound(ec: DataFrame, r: DataFrame, base: Long)
+      : DataFrame =
+    ec.join(r, ec("src") === r("node"))
+      .groupBy(ec("dst").as("node2"))
+      .agg(sum(expr("r div d")).as("s"))
+      .select(col("node2").as("node"),
+        expr(s"CAST(${base}L + ($DampNum * s) div 100 AS BIGINT)").as("r"))
+
+  /** The top 20 of a (node, r) rank frame as (kind, key, `as`). */
+  private def topRanks(r: DataFrame, as: String): DataFrame =
+    r.select(
+        when(pmod(col("node"), lit(2)) === 0, "customer")
+          .otherwise("supplier").as("kind"),
+        expr("CAST(node div 2 AS BIGINT)").as("key"),
+        col("r").as(as))
+      .orderBy(desc(as), asc("kind"), asc("key"))
+      .limit(20)
 
   /** Fixed-point PageRank, [[Iterations]] rounds, top-20 nodes.
     * r⁰(v) = ⌊Mass/N⌋; rᵏ⁺¹(v) = ⌊15·Mass/(100·N)⌋ +
     * ⌊85·Σ_{u→v}⌊rᵏ(u)/deg(u)⌋/100⌋ — every division is a floor over
     * integers, replicated exactly by the oracle's unrolled CTEs.
     *
-    * Round checkpoints stay EAGER here — measured, not assumed (r11):
-    * extending [[qBfsHops]]'s lazy-checkpoint hardening to this loop
-    * was tried and re-measured twice; the single-reference rank chain
-    * got ~10 % SLOWER lazy (min-of-runs 2.49 → 2.56/2.70 s at sf0.1) —
-    * an eager checkpoint gives each round's join a known-size compact
-    * leaf to plan from, which beats saving the 3 barrier jobs here.
-    * [[qKcore]]'s peel rounds, whose output is referenced TWICE per
-    * round, measured the opposite and are lazy (see there). */
+    * Under [[graphBroadcastNodes]] the rank table stays on the driver:
+    * the uniform r⁰ costs no job, and each round is one [[inMass]] job
+    * plus the affine step. Above it each round is a [[rankRound]]
+    * shuffle join, checkpointed EAGERLY (measured faster than lazy for
+    * this single-reference chain; the history is in NOTES.md). */
   val qPagerank: Q = Q("q_pagerank", {
     val step = (k: Int) =>
       s"""r${k + 1} AS (
@@ -151,29 +327,23 @@ object GraphOps {
   }) { (s, d) =>
     val ec = edgesWithDeg(s, d)
     // n as a driver scalar (the memoized node count) instead of a
-    // 1-row crossJoin: same integer, one broadcast join fewer per
-    // round, and it feeds the nodeSide dispatch. All quantities are
-    // non-negative, so Scala's / is the same floor as SQL's div.
+    // 1-row crossJoin: same integer, and it feeds the ceiling dispatch
     val n = nodeCount(s, d)
-    var r: DataFrame = ec.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(Mass / n).as("r"))
-      .localCheckpoint(true)
-    for (_ <- 0 until Iterations) {
-      r = ec.join(nodeSide(s, r, n), ec("src") === r("node"))
-        .groupBy(ec("dst").as("node2"))
-        .agg(sum(expr("r div d")).as("s"))
-        .select(col("node2").as("node"),
-          expr(s"CAST(${(15L * Mass) / (100L * n)}L " +
-            s"+ ($DampNum * s) div 100 AS BIGINT)").as("r"))
+    val base = (15L * Mass) / (100L * n)
+    val ranks = if (underCeiling(s, n)) {
+      var t = Ranks.uniform(Mass / n)
+      for (_ <- 0 until Iterations)
+        t = inMass(ec, t).map(base + DampNum * _ / 100)
+      t.toFrame(s)
+    } else {
+      var r: DataFrame = ec.select(col("src").as("node")).distinct()
+        .select(col("node"), lit(Mass / n).as("r"))
         .localCheckpoint(true)
+      for (_ <- 0 until Iterations)
+        r = rankRound(ec, r, base).localCheckpoint(true)
+      r
     }
-    r.select(
-        when(pmod(col("node"), lit(2)) === 0, "customer")
-          .otherwise("supplier").as("kind"),
-        expr("CAST(node div 2 AS BIGINT)").as("key"),
-        col("r").as("rank_pico"))
-      .orderBy(desc("rank_pico"), asc("kind"), asc("key"))
-      .limit(20)
+    topRanks(ranks, "rank_pico")
   }
 
   /** Synchronous label-propagation community detection (Raghavan et al.
@@ -253,8 +423,11 @@ object GraphOps {
     * frame before the per-node sum, so seeds with no incoming mass
     * stay alive (a CASE on the aggregate would drop them) and both
     * engines share one spelling. Integer floors end to end
-    * ([[Mass]]-scaled), oracle-exact; per round one edge⋈rank
-    * equi-join + a map-side-combinable sum, seeds broadcastable. */
+    * ([[Mass]]-scaled), oracle-exact. Under [[graphBroadcastNodes]]
+    * the seed set is collected once and each round is one [[inMass]]
+    * job, the teleport union a [[Ranks.merge]] on the driver; above it
+    * each round is an edge⋈rank shuffle join + a map-side-combinable
+    * sum. */
   val qPprSeeds: Q = Q("q_ppr_seeds", {
     val step = (k: Int) =>
       s"""p${k + 1} AS (
@@ -291,38 +464,43 @@ object GraphOps {
   }) { (s, d) =>
     val ec = edgesWithDeg(s, d)
     val n = nodeCount(s, d)
-    val seeds = ec.select(col("src").as("node")).distinct()
-      .filter(pmod(col("node"), lit(2)) === 0 &&
-        expr("node div 2") <= 5)
-      .localCheckpoint(true)
-    // seed count as a driver scalar (one tiny count over a checkpointed
-    // frame) — drops the per-round nsRow crossJoin; the teleport frame
-    // is loop-INVARIANT, so it is built and checkpointed once instead
-    // of re-derived inside every round's plan (r15).
-    val ns = seeds.count()
-    var r: DataFrame = seeds
-      .select(col("node"), lit(Mass / ns).as("r"))
-      .localCheckpoint(true)
-    val tele = seeds
-      .select(col("node"), lit((15L * Mass) / (100L * ns)).as("r"))
-      .localCheckpoint(true)
-    for (_ <- 0 until Iterations) {
-      val prop = ec.join(nodeSide(s, r, n), ec("src") === r("node"))
-        .groupBy(ec("dst").as("node"))
-        .agg(expr(s"CAST(($DampNum * SUM(r div d)) div 100 AS BIGINT)")
-          .as("r"))
-      r = tele.unionAll(prop)
-        .groupBy("node")
-        .agg(sum("r").cast("long").as("r"))
+    val isSeed = pmod(col("node"), lit(2)) === 0 && expr("node div 2") <= 5
+    val ranks = if (underCeiling(s, n)) {
+      // the seed set, collected once from the seeds' edge rows and
+      // deduplicated on the driver (a Spark distinct would add a
+      // shuffle stage and a job)
+      val seeds = ec.select(col("src").as("node")).filter(isSeed)
+        .collect().map(_.getLong(0)).distinct.sorted
+      val (r0, tele) = (Mass / seeds.length,
+        (15L * Mass) / (100L * seeds.length))
+      val teleport = Ranks(seeds, seeds.map(_ => tele))
+      var t = Ranks(seeds, seeds.map(_ => r0))
+      for (_ <- 0 until Iterations)
+        t = Ranks.merge(teleport, inMass(ec, t).map(DampNum * _ / 100))
+      t.toFrame(s)
+    } else {
+      val seeds = ec.select(col("src").as("node")).distinct()
+        .filter(isSeed)
         .localCheckpoint(true)
+      // seed count as a driver scalar — drops the per-round nsRow
+      // crossJoin; the teleport frame is loop-INVARIANT, so it is built
+      // and checkpointed once instead of re-derived every round
+      val ns = seeds.count()
+      var r: DataFrame = seeds
+        .select(col("node"), lit(Mass / ns).as("r"))
+        .localCheckpoint(true)
+      val tele = seeds
+        .select(col("node"), lit((15L * Mass) / (100L * ns)).as("r"))
+        .localCheckpoint(true)
+      for (_ <- 0 until Iterations) {
+        r = tele.unionAll(rankRound(ec, r, 0L))
+          .groupBy("node")
+          .agg(sum("r").cast("long").as("r"))
+          .localCheckpoint(true)
+      }
+      r
     }
-    r.select(
-        when(pmod(col("node"), lit(2)) === 0, "customer")
-          .otherwise("supplier").as("kind"),
-        expr("CAST(node div 2 AS BIGINT)").as("key"),
-        col("r").as("ppr_pico"))
-      .orderBy(desc("ppr_pico"), asc("kind"), asc("key"))
-      .limit(20)
+    topRanks(ranks, "ppr_pico")
   }
 
   /** Partition-quality report for the [[qLpaCommunities]] communities:
@@ -685,8 +863,8 @@ object GraphOps {
     // both-consumers-share-blocks property) without the 2 x PeelRounds
     // driver-blocking barrier jobs. Measured ~12 % faster in both
     // re-runs (min 1.78 -> 1.44/1.63 s at sf0.1); the single-reference
-    // pagerank/ppr chains measured the OPPOSITE and stay eager (see
-    // qPagerank's checkpoint note).
+    // pagerank/ppr DataFrame rounds measured the OPPOSITE and stay
+    // eager (NOTES.md, "PageRank rank table on the driver").
     val n = nodeCount(s, d) // survivor sets are node-bounded
     for (_ <- 0 until PeelRounds) {
       keep = e.groupBy("src").agg(count(lit(1)).as("dg"))
@@ -724,9 +902,11 @@ object GraphOps {
     * flat however many rounds the graph needs; edge-count equality is a
     * sound exit because degrees are a function of the edge multiset.
     * Returns surviving (node, dg) with the degree from the LAST peel,
-    * i.e. the node's degree within the core. */
+    * i.e. the node's degree within the core. `nodes`, when the caller
+    * knows the graph's node count, bounds the survivor sets for the
+    * [[nodeSide]] dispatch; without it the edge count bounds them. */
   private[graft] def kcoreConverged(edges: DataFrame, k: Int,
-      maxRounds: Int = 1000): DataFrame = {
+      maxRounds: Int = 1000, nodes: Long = Long.MaxValue): DataFrame = {
     // LAZY checkpoints, ONE action per round (r14, the bfsDeltaFrontier
     // one-job-per-round hardening applied here): the round's single
     // `e2.count()` materializes keep's blocks (both semi-join consumers
@@ -747,12 +927,13 @@ object GraphOps {
         .filter(col("dg") >= k)
         .select(col("src").as("node"), col("dg"))
         .localCheckpoint(false)
-      // survivors ≤ distinct src ≤ n (this round's edge count, already
-      // collected as the convergence scalar) — the nodeSide bound
+      // survivors ≤ distinct src ≤ min(nodes, n), n being this round's
+      // edge count, already collected as the convergence scalar
+      val bound = math.min(nodes, n)
       val e2 = e
-        .join(nodeSide(s, keep.select(col("node").as("src")), n),
+        .join(nodeSide(s, keep.select(col("node").as("src")), bound),
           Seq("src"), "left_semi")
-        .join(nodeSide(s, keep.select(col("node").as("dst")), n),
+        .join(nodeSide(s, keep.select(col("node").as("dst")), bound),
           Seq("dst"), "left_semi")
         .select("src", "dst")
         .localCheckpoint(false)
@@ -767,43 +948,48 @@ object GraphOps {
 
   /** Run-to-convergence PageRank (VERDICT r4 #3): the [[qPagerank]]
     * recurrence iterated until the largest per-node rank change is
-    * ≤ `tolPico` fixed-point units (or `maxRounds` fires). The
-    * convergence scalar is one long per round — max |Δrank| over an
-    * equi-join of consecutive rank tables on the node key — mirroring
-    * the `Dedup.components` exit; integer ranks make the test exact
-    * (tolPico = 0 demands a literal fixed point). The symmetrized graph
-    * has no dangling nodes, so consecutive rank tables share the same
-    * node set and the delta join is lossless. */
+    * ≤ `tolPico` fixed-point units (or `maxRounds` ≥ 1 fires). The
+    * convergence scalar is max |Δrank| over consecutive rank tables on
+    * the node key — mirroring the `Dedup.components` exit; integer ranks
+    * make the test exact (tolPico = 0 demands a literal fixed point).
+    * The symmetrized graph has no dangling nodes, so consecutive rank
+    * tables share the same node set and the comparison is lossless.
+    * Under [[graphBroadcastNodes]] the tables stay on the driver, so a
+    * round is one [[inMass]] job and Δ costs none; above it each round
+    * is a checkpointed [[rankRound]] plus a delta-join job. */
   private[graft] def pagerankConverged(s: SparkSession, d: String,
       tolPico: Long = 1000L, maxRounds: Int = 100): DataFrame = {
+    require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
     val ec = edgesWithDeg(s, d)
     val n = nodeCount(s, d)
-    var r: DataFrame = ec.select(col("src").as("node")).distinct()
-      .select(col("node"), lit(Mass / n).as("r"))
-      .localCheckpoint(true)
+    val base = (15L * Mass) / (100L * n)
     var converged = false
     var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      // Round checkpoint stays EAGER (re-measured r14: the lazy
-      // one-job-per-round variant landed 1.29-1.30 s vs 1.23 s eager at
-      // sf0.1 — the rank chain prefers a known-size compact leaf per
-      // round, the same result qPagerank's eager-vs-lazy note records).
-      val r2 = ec.join(nodeSide(s, r, n), ec("src") === r("node"))
-        .groupBy(ec("dst").as("node2"))
-        .agg(sum(expr("r div d")).as("s"))
-        .select(col("node2").as("node"),
-          expr(s"CAST(${(15L * Mass) / (100L * n)}L " +
-            s"+ ($DampNum * s) div 100 AS BIGINT)").as("r"))
+    if (underCeiling(s, n)) {
+      var t = Ranks.uniform(Mass / n)
+      while (!converged && rounds < maxRounds) {
+        val t2 = inMass(ec, t).map(base + DampNum * _ / 100)
+        converged = t2.maxDelta(t) <= tolPico
+        t = t2
+        rounds += 1
+      }
+      t.toFrame(s)
+    } else {
+      var r: DataFrame = ec.select(col("src").as("node")).distinct()
+        .select(col("node"), lit(Mass / n).as("r"))
         .localCheckpoint(true)
-      val delta = r2.select(col("node"), col("r").as("r2"))
-        .join(nodeSide(s, r, n), "node")
-        .agg(coalesce(max(abs(col("r2") - col("r"))), lit(0L)))
-        .first().getLong(0)
-      converged = delta <= tolPico
-      r = r2
-      rounds += 1
+      while (!converged && rounds < maxRounds) {
+        val r2 = rankRound(ec, r, base).localCheckpoint(true)
+        val delta = r2.select(col("node"), col("r").as("r2"))
+          .join(r, "node")
+          .agg(coalesce(max(abs(col("r2") - col("r"))), lit(0L)))
+          .first().getLong(0)
+        converged = delta <= tolPico
+        r = r2
+        rounds += 1
+      }
+      r
     }
-    r
   }
 
   /** Delta-frontier BFS (VERDICT r4 #6): the [[qBfsHops]] expansion
@@ -907,7 +1093,7 @@ object GraphOps {
        |       CAST(MIN(dg) AS BIGINT) AS min_deg,
        |       CAST(MAX(dg) AS BIGINT) AS max_deg
        |FROM kp GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    kcoreConverged(symEdges(s, d), CoreK)
+    kcoreConverged(symEdges(s, d), CoreK, nodes = nodeCount(s, d))
       .groupBy(
         when(pmod(col("node"), lit(2)) === 0, "customer")
           .otherwise("supplier").as("kind"))
@@ -1023,14 +1209,7 @@ object GraphOps {
        |WHERE round = (SELECT MAX(round) FROM (SELECT round FROM walk) q)
        |ORDER BY rank_pico DESC, kind, key LIMIT 20""".stripMargin) {
     (s, d) =>
-      pagerankConverged(s, d, tolPico = RankTolPico)
-        .select(
-          when(pmod(col("node"), lit(2)) === 0, "customer")
-            .otherwise("supplier").as("kind"),
-          expr("CAST(node div 2 AS BIGINT)").as("key"),
-          col("r").as("rank_pico"))
-        .orderBy(desc("rank_pico"), asc("kind"), asc("key"))
-        .limit(20)
+      topRanks(pagerankConverged(s, d, tolPico = RankTolPico), "rank_pico")
   }
 
   val all: Seq[Q] = Seq(qPagerank, qButterflyCount, qTriangles, qBfsHops,

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.graph.GraphOps
@@ -78,6 +82,102 @@ class GraphOpsSpec extends SparkSpec {
     val total = r.agg(sum("r")).first().getLong(0)
     assert(total > 0L && total <= GraphOps.Mass,
       s"total rank mass $total outside (0, ${GraphOps.Mass}]")
+  }
+
+  private val sf01 = sf001.replace("sf0.001", "sf0.01")
+
+  /** Jobs started by `body`, counted by a listener under a private job
+    * group. A marker job in a second group drains the listener first:
+    * a listener sees events in the order they were posted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graphops-${java.util.UUID.randomUUID}"
+    val marker = s"$group-drain"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => drained.countDown()
+          case _ =>
+        }
+    }
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup(group)(body)
+      inGroup(marker)(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, TimeUnit.SECONDS), "listener never drained")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("inMass: edges from unranked sources add nothing; the rank " +
+    "table goes back to Spark as one slice") {
+    // ranked: 0 (degree 3) and 4 (degree 1); 1, 2, 3 and 5 are unranked
+    // and must neither add mass nor appear as dst rows of their own
+    val e = sym(Seq((0L, 1L), (0L, 2L), (0L, 3L), (4L, 5L), (1L, 2L)))
+    val ec = e.join(e.groupBy("src").agg(count(lit(1)).as("d")), "src")
+      .repartition(3)
+    val ranks = GraphOps.Ranks(Array(0L, 4L), Array(900L, 7L))
+    val got = GraphOps.inMass(ec, ranks)
+    assert(got.ids.toSeq == Seq(1L, 2L, 3L, 5L))
+    assert(got.r.toSeq == Seq(300L, 300L, 300L, 7L))
+    val f = ranks.toFrame(spark)
+    assert(f.rdd.getNumPartitions == 1)
+    assert(f.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq ==
+      Seq(0L -> 900L, 4L -> 7L))
+  }
+
+  test("driver-held rank rounds and the DataFrame fallback give " +
+    "identical rows at sf0.01") {
+    // graphBroadcastNodes = 0 puts every graph above the ceiling, so the
+    // second pass runs the DataFrame shuffle rounds
+    val key = "spark.graft.graphBroadcastNodes"
+    val runs: Seq[(String, () => Seq[Row])] = Seq(
+      "q_pagerank" -> (() => GraphOps.qPagerank.fn(spark, sf01)
+        .collect().toSeq),
+      "q_ppr_seeds" -> (() => GraphOps.qPprSeeds.fn(spark, sf01)
+        .collect().toSeq),
+      "pagerankConverged" -> (() =>
+        pagerankConverged(spark, sf01, tolPico = GraphOps.RankTolPico)
+          .orderBy("node").collect().toSeq))
+    val fast = runs.map(_._2())
+    val fastJobs = jobsOf(GraphOps.qPagerank.fn(spark, sf01).collect())
+    val before = spark.conf.getOption(key)
+    val conf0 = spark.conf.getAll
+    spark.conf.set(key, "0")
+    try {
+      val slow = runs.map(_._2())
+      val slowJobs = jobsOf(GraphOps.qPagerank.fn(spark, sf01).collect())
+      // the loops read the ceiling and write no session conf
+      assert(spark.conf.getAll == conf0 + (key -> "0"))
+      assert(slowJobs > fastJobs,
+        s"fallback ran $slowJobs jobs, driver path $fastJobs")
+      for (((name, _), f, sl) <- runs.lazyZip(fast).lazyZip(slow)) {
+        assert(f.nonEmpty, name)
+        assert(f == sl, name)
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(spark.conf.getOption(key) == before)
+  }
+
+  test("job counts: q_pagerank <= Iterations + 2, q_ppr_seeds <= " +
+    "Iterations + 3, pagerankConverged <= rounds + 3") {
+    GraphOps.qPagerank.fn(spark, sf01).collect() // memo builds
+    val pr = jobsOf(GraphOps.qPagerank.fn(spark, sf01).collect())
+    assert(pr <= GraphOps.Iterations + 2, s"q_pagerank ran $pr jobs")
+    val ppr = jobsOf(GraphOps.qPprSeeds.fn(spark, sf01).collect())
+    assert(ppr <= GraphOps.Iterations + 3, s"q_ppr_seeds ran $ppr jobs")
+    // tolPico = -1 is never met, so exactly `rounds` rounds run
+    val rounds = 5
+    val pc = jobsOf(pagerankConverged(spark, sf01, tolPico = -1L,
+      maxRounds = rounds).collect())
+    assert(pc <= rounds + 3, s"pagerankConverged ran $pc jobs")
   }
 
   test("delta-frontier BFS: identical labels, frontier-sized joins on a " +
