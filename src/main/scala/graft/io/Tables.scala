@@ -1,8 +1,10 @@
 package graft.io
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Source/sink surface of the engine (SURVEY.md §2.1).
   *
@@ -29,8 +31,45 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     ensureSessionRegistered(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+    val path = s"$sfDir/$name.parquet"
+    normalizeTs(spark.read.schema(footerSchema(spark, path)).parquet(path))
   }
+
+  /** The schema `spark.read.parquet(path)` infers for a parquet file or
+    * directory, inferred once per (path, the modification time and
+    * length of every file under it, the session's values of the parquet
+    * type-mapping confs below) — all the inferred schema depends on.
+    * Each inference is a 1-task Spark job
+    * (`SchemaMergeUtils.mergeSchemasInParallel`, 25-45 ms plus driver
+    * time); a repeat read of unchanged files reuses the schema and only
+    * lists the files, on the driver. A changed file replaces its path's
+    * entry, so the cache holds one schema per (path, confs) read. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // plain statuses: a LocatedFileStatus (`listFiles`) reads the
+    // permissions, which the local file system gets by forking `ls`
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files)
+      else Seq(st)
+    val stamp = files(fs.getFileStatus(p)).map(f =>
+      (f.getPath.toString, f.getModificationTime, f.getLen)).toVector
+    val key = (path, FooterConfs.map(spark.conf.getOption))
+    footerSchemas.get(key).filter(_._1 == stamp).map(_._2).getOrElse {
+      val schema = spark.read.parquet(path).schema
+      footerSchemas.put(key, (stamp, schema))
+      schema
+    }
+  }
+
+  /** The confs that change how a parquet footer maps to Spark types. */
+  private val FooterConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private val footerSchemas = scala.collection.concurrent.TrieMap.empty[
+    (String, Seq[Option[String]]), (Vector[(String, Long, Long)], StructType)]
 
   /** The ts-spelling normalization alone, for frames [[load]] cannot
     * produce — e.g. a `readStream` source, which must be built from a

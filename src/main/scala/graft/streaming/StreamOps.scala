@@ -3,6 +3,8 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing
+  .FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -692,13 +694,20 @@ object StreamOps {
     ()
   }
 
-  /** Run `body` (which starts and drains a streaming query) with the
-    * session's shuffle-partition count — which Structured Streaming
-    * latches at query start as its STATE-STORE partition count and
-    * records in the checkpoint's offset log — set to
-    * [[VersionChain.widthFor]] of the bytes under `inputs`, the paths
-    * the run reads, and AQE off, restoring both previous values after.
-    * Why derived from the input: at gate scale the per-micro-batch cost
+  /** Run `body` (which starts and drains a streaming query) under four
+    * session settings, restoring each previous value (or its absence)
+    * after:
+    *   1. the shuffle-partition count — which Structured Streaming
+    *      latches at query start as its STATE-STORE partition count and
+    *      records in the checkpoint's offset log — set to
+    *      [[VersionChain.widthFor]] of the bytes under `inputs`, the
+    *      paths the run reads;
+    *   2. AQE off;
+    *   3. artifact isolation off (`spark.sql.artifact.isolation.enabled`);
+    *   4. on a `file:` [[scratchRoot]] only, the FileSystem-based
+    *      checkpoint file manager.
+    *
+    * 1. Why derived from the input: at gate scale the per-micro-batch cost
     * is per-partition state-store open/commit and per-task scheduling,
     * not data, so a width set by a constant or the core count is
     * overhead; ⌈input bytes / 64 MB⌉ is 1 there whatever the core count.
@@ -706,7 +715,9 @@ object StreamOps {
     * keeps: `q_stream_hourly`'s state is #hours × #types whatever the
     * events volume, so past 64 MB of events it gets more stores than
     * its state needs. No workload measured so far (sf0.01, sf0.1)
-    * reaches a width above 1. Why AQE off: a chain's maintenance batch
+    * reaches a width above 1.
+    *
+    * 2. Why AQE off: a chain's maintenance batch
     * is a LATENCY-bound sequence of small plans (screen → ledger write
     * → fold write), and AQE turns every Exchange into its own
     * materialized query stage — a separate job plus a driver
@@ -714,21 +725,43 @@ object StreamOps {
     * AQE vs 33 without); turning it back on measured neutral at widths
     * 4 and 32, so it is not a knob.
     *
-    * Both settings are SESSION-global: this assumes one thread plans
+    * 3. Why isolation off: every streaming query runs in a session
+    * cloned at start, and with isolation on each clone gets its own
+    * executor classloader. The generated-code cache is keyed by
+    * classloader, so every run recompiled its whole-stage classes
+    * (`q_stream_hourly`: 14 classes, 230-375 ms of Janino per run); with
+    * isolation off a repeat run compiles none. The engine adds no
+    * session artifacts (no `addArtifact`/`addJar`), so there is nothing
+    * to isolate. A session built per run elsewhere must be non-isolated
+    * too, or every run recompiles.
+    *
+    * 4. Why the FileSystem-based manager on a local root: the default,
+    * FileContext-based one renames every offset, commit, metadata and
+    * state file through `FileContext.rename`, which on the local file
+    * system without the native Hadoop library forks a `readlink`
+    * process per rename (about 60 per query run). The FileSystem-based
+    * one renames with `File.renameTo`, an atomic rename(2), and forks
+    * nothing (`q_stream_ann_ingest` 1.64 → 1.34 s per run). HDFS and
+    * object-store roots keep Spark's default.
+    *
+    * All four are SESSION-global: this assumes one thread plans
     * queries on the session while `body` runs. Its callers are
     * [[VersionChain.run]] and the three memory-sink gates. */
   private[streaming] def withStatePartitions[T](s: SparkSession,
       inputs: Seq[String])(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prev = s.conf.get(key)
-    val prevAqe = s.conf.get(aqeKey)
-    s.conf.set(key,
-      VersionChain.widthFor(VersionChain.bytesUnder(s, inputs)).toString)
-    s.conf.set(aqeKey, "false")
-    try body finally {
-      s.conf.set(key, prev)
-      s.conf.set(aqeKey, prevAqe)
+    val local = hadoopFs(s, scratchRoot(s)).getScheme == "file"
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" ->
+        VersionChain.widthFor(VersionChain.bytesUnder(s, inputs)).toString,
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.artifact.isolation.enabled" -> "false") ++
+      Option.when(local)("spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName)
+    val prev = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -745,9 +778,13 @@ object StreamOps {
     * so a KB-scale settled table would otherwise cost one task per core
     * in every job that reads it. `coalesce` suffices here: the rows are
     * already materialized, so there is no upstream compute for it to
-    * serialize. */
-  private def runToMemorySink(frame: DataFrame,
-      mode: OutputMode): DataFrame = {
+    * serialize. A non-empty `sortBy` orders the snapshot before its one
+    * checkpoint. With `requireInput`, a run whose source delivered no
+    * rows (Σ `numInputRows` of its progress is 0) fails with that
+    * message: read from the query's own progress, it costs no job. */
+  private def runToMemorySink(frame: DataFrame, mode: OutputMode,
+      sortBy: Seq[String] = Nil,
+      requireInput: Option[String] = None): DataFrame = {
     val s = frame.sparkSession
     val name = s"stream_sink_${memSinkId.incrementAndGet()}"
     val ckpt =
@@ -756,7 +793,11 @@ object StreamOps {
       val q = frame.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt).outputMode(mode).start()
       try q.processAllAvailable() finally q.stop()
-      s.table(name).coalesce(s.sessionState.conf.numShufflePartitions)
+      requireInput.foreach(msg =>
+        require(q.recentProgress.map(_.numInputRows).sum > 0, msg))
+      val settled =
+        s.table(name).coalesce(s.sessionState.conf.numShufflePartitions)
+      (if (sortBy.isEmpty) settled else settled.orderBy(sortBy.map(col): _*))
         .localCheckpoint(true)
     } finally {
       s.catalog.dropTempView(name)
@@ -794,7 +835,7 @@ object StreamOps {
     graft.io.Tables.ensureSessionRegistered(s)
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val evPath = s"$d/events.parquet"
-    val schema = s.read.parquet(evPath).schema
+    val schema = graft.io.Tables.footerSchema(s, evPath)
     // the pyarrow sf layout stores each table as ONE parquet FILE (the
     // file source monitors a directory, so stream the sf dir with a
     // glob filter selecting just the events table); a Spark-written
@@ -807,15 +848,13 @@ object StreamOps {
       else s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
     val ev = graft.io.Tables.normalizeTs(src)
-    // state-store and sort width: see withStatePartitions
-    val out = withStatePartitions(s, Seq(evPath))(
-      runToMemorySink(hourlyCounts(ev), OutputMode.Complete())
-        .orderBy("hour_start", "event_type").localCheckpoint(true))
-    // an empty settled table means the source listed no files (the
-    // dir/glob mismatch above) — fail loudly, never time a no-op
-    require(!out.isEmpty,
-      s"q_stream_hourly: streaming source listed no rows under $evPath")
-    out
+    // state-store and sort width: see withStatePartitions. A source
+    // that delivered no rows means it listed no files (the dir/glob
+    // mismatch above) — fail loudly, never time a no-op
+    withStatePartitions(s, Seq(evPath))(
+      runToMemorySink(hourlyCounts(ev), OutputMode.Complete(),
+        sortBy = Seq("hour_start", "event_type"), requireInput = Some(
+          s"q_stream_hourly: streaming source listed no rows under $evPath")))
   }
 
   /** Read surface of the flat merge sink: the newest COMMITTED state
@@ -1040,8 +1079,7 @@ object StreamOps {
   /** Read the stateful split as a 6-batch micro-batch stream. */
   private def statefulStream(s: SparkSession,
       sp: StatefulSplit): DataFrame = {
-    val schema = s.read.parquet(sp.path).schema
-    s.readStream.schema(schema)
+    s.readStream.schema(graft.io.Tables.footerSchema(s, sp.path))
       .option("maxFilesPerTrigger", "1").parquet(sp.path)
   }
 

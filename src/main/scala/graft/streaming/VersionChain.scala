@@ -1,7 +1,9 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The version-chain protocol every stateful stream sink in [[StreamOps]]
   * runs on. A chain is a directory of parquet versions `v=N`, each
@@ -25,13 +27,45 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *     exactly this reason.
   * [[VersionChain.run]] owns the per-run lifecycle around it. `state`,
   * `verd` (ledgers) and `ckpt` (the streaming checkpoint) share one
-  * file system.
+  * file system, built once per chain.
+  *
+  * The chain records the schema of every file set it writes and reads
+  * it back with that schema: a `spark.read.parquet` without one runs a
+  * schema-inference job on files whose schema the chain already knows.
   */
-private[graft] final class VersionChain(s: SparkSession, val state: String,
-    val verd: String = "", val ckpt: String = "", seeded: Boolean = false) {
+private[graft] final class VersionChain private (s: SparkSession,
+    val state: String, val verd: String, val ckpt: String, seeded: Boolean,
+    conf: Configuration) {
   import VersionChain._
 
-  private val fs = hadoopFs(s, state)
+  def this(s: SparkSession, state: String, verd: String = "",
+      ckpt: String = "", seeded: Boolean = false) =
+    this(s, state, verd, ckpt, seeded, s.sessionState.newHadoopConf())
+
+  /** A file system on the chain's one Hadoop conf: building a conf
+    * copies the whole session conf, so the chain builds it once. */
+  private def fsOf(path: String): FileSystem =
+    FileSystem.get(new java.net.URI(path), conf)
+
+  private val fs = fsOf(state)
+
+  /** Schema of each file set this chain wrote, by path. */
+  private val written =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
+  /** Writes run through `save`, so a job profile tells them ("save at
+    * VersionChain") from reads ("parquet at VersionChain"). */
+  private def write(frame: DataFrame, dst: String): Unit = {
+    written.remove(dst)
+    frame.write.mode("overwrite").format("parquet").save(dst)
+    written.put(dst, frame.schema)
+    ()
+  }
+
+  /** `p` read with the schema it was written with, when this chain
+    * wrote it; inferred otherwise. */
+  private def load(p: String): DataFrame =
+    Option(written.get(p)).fold(s.read.parquet(p))(s.read.schema(_).parquet(p))
 
   /** The version micro-batch `batchId` writes. */
   def out(batchId: Long): Long = if (seeded) batchId + 1 else batchId
@@ -56,12 +90,11 @@ private[graft] final class VersionChain(s: SparkSession, val state: String,
     s"no committed version below ${out(batchId)} under $state — the " +
       "seed (v=0) is missing"))
 
-  def read(v: Long, kind: String = "v"): DataFrame =
-    s.read.parquet(path(kind, v))
+  def read(v: Long, kind: String = "v"): DataFrame = load(path(kind, v))
 
   /** Write a seed artifact at version 0, unsized. */
   def seed(frame: DataFrame, kind: String = "v"): Unit =
-    frame.write.mode("overwrite").parquet(path(kind, 0))
+    write(frame, path(kind, 0))
 
   /** Commit batch `batchId`'s output: the `sides` in order, then `next`
     * as `v=out` — the marker. `next` is by-name, so whatever computing it
@@ -70,16 +103,15 @@ private[graft] final class VersionChain(s: SparkSession, val state: String,
     * `rows` is sized by its row count instead. */
   def commit(batchId: Long, from: Option[Long], sides: Side*)(
       next: => DataFrame): Unit = {
-    val width = widthFor(bytesUnder(s, from.toSeq.map(path("v", _))))
+    val width = widthFor(from.map(v => bytesAt(fs, path("v", v))).sum)
     sides.foreach { sd =>
       val dst =
         if (sd.kind == "b") s"$verd/b=$batchId"
         else path(sd.kind, out(batchId))
-      sd.rows.fold(sd.frame.repartition(width))(sizedByRows(sd.frame, _))
-        .write.mode("overwrite").parquet(dst)
+      write(sd.rows.fold(sd.frame.repartition(width))(
+        sizedByRows(sd.frame, _)), dst)
     }
-    next.repartition(width).write.mode("overwrite")
-      .parquet(path("v", out(batchId)))
+    write(next.repartition(width), path("v", out(batchId)))
   }
 
   /** Keep the newest `keep` versions, committed or not. Three for the
@@ -89,11 +121,18 @@ private[graft] final class VersionChain(s: SparkSession, val state: String,
     fs.listStatus(new Path(state)).toSeq.map(_.getPath.getName)
       .collect { case n if n.startsWith("v=") => n.drop(2).toLong }
       .sorted.reverse.drop(keep)
-      .foreach(v => fs.delete(new Path(path("v", v)), true))
+      .foreach { v =>
+        fs.delete(new Path(path("v", v)), true)
+        written.remove(path("v", v))
+      }
 
-  /** The chain of one hash bucket, under `bucket=<b>`. */
-  def bucket(b: Long): VersionChain =
-    new VersionChain(s, s"$state/bucket=$b", verd, ckpt, seeded)
+  private val buckets =
+    new java.util.concurrent.ConcurrentHashMap[Long, VersionChain]()
+
+  /** The chain of one hash bucket, under `bucket=<b>`: one per bucket,
+    * so a later batch reads the bucket's versions with their schemas. */
+  def bucket(b: Long): VersionChain = buckets.computeIfAbsent(b,
+    _ => new VersionChain(s, s"$state/bucket=$b", verd, ckpt, seeded, conf))
 
   /** The committed verdict ledgers of batches `0 until batches`,
     * projected to `cols` and ordered by (batch, doc_id). */
@@ -102,9 +141,21 @@ private[graft] final class VersionChain(s: SparkSession, val state: String,
       val p = s"$verd/b=$i"
       require(fs.exists(new Path(p, "_SUCCESS")),
         s"batch $i left no committed verdict ledger at $p")
-      s.read.parquet(p)
+      load(p)
     }.reduce(_ unionByName _)
       .select(cols: _*).orderBy("batch", "doc_id").localCheckpoint(true)
+
+  /** Whether the streaming checkpoint recorded batch `batchId` as run. */
+  private def checkpointCommitted(batchId: Long): Boolean =
+    fs.exists(new Path(s"$ckpt/commits/$batchId"))
+
+  /** The number of micro-batches (parquet files) of the split `src`. */
+  private def batchesOf(src: String): Long =
+    fsOf(src).listStatus(new Path(src))
+      .count(_.getPath.getName.endsWith(".parquet")).toLong
+
+  private def deleteDirs(): Unit =
+    Seq(state, verd, ckpt).foreach(d => fs.delete(new Path(d), true))
 }
 
 private[graft] object VersionChain {
@@ -161,7 +212,7 @@ private[graft] object VersionChain {
         crashes.foreach { k =>
           leg(s, spec, c, Some(k))
           require(c.committed.lastOption.contains(c.out(k)) &&
-            !hadoopFs(s, c.ckpt).exists(new Path(s"${c.ckpt}/commits/$k")),
+            !c.checkpointCommitted(k),
             s"${spec.name}: the crash after batch $k must leave its " +
               "version sink-committed, the tail unrun and the batch " +
               "checkpoint-uncommitted")
@@ -169,15 +220,14 @@ private[graft] object VersionChain {
         }
         leg(s, spec, c, None)
         if (spec.seeded) {
-          val batches = hadoopFs(s, spec.src).listStatus(new Path(spec.src))
-            .count(_.getPath.getName.endsWith(".parquet"))
+          val batches = c.batchesOf(spec.src)
           require(c.committed.lastOption.contains(c.out(batches - 1L)),
             s"${spec.name}: expected $batches committed batches, newest " +
               s"version ${c.committed.lastOption}")
         }
         result(c)
       }
-    } finally for (p <- Seq(c.state, c.verd, c.ckpt)) delete(s, p)
+    } finally c.deleteDirs()
   }
 
   /** One streaming leg: one file of `spec.src` per micro-batch,
@@ -186,8 +236,7 @@ private[graft] object VersionChain {
     * sink-side but not runtime-side REPLAYS that batch). */
   private def leg(s: SparkSession, spec: Spec, c: VersionChain,
       crashAfter: Option[Long]): Unit = {
-    val schema = s.read.parquet(spec.src).schema
-    val q = s.readStream.schema(schema)
+    val q = s.readStream.schema(graft.io.Tables.footerSchema(s, spec.src))
       .option("maxFilesPerTrigger", "1").parquet(spec.src)
       .writeStream.option("checkpointLocation", c.ckpt)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -249,12 +298,15 @@ private[graft] object VersionChain {
   /** On-disk bytes under `paths`, files or directories (a missing path
     * counts 0): one driver-side ContentSummary call each, no Spark job. */
   private[streaming] def bytesUnder(s: SparkSession,
-      paths: Seq[String]): Long =
-    paths.map { p =>
-      val fs = hadoopFs(s, p)
-      val path = new Path(p)
-      if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
-    }.sum
+      paths: Seq[String]): Long = {
+    val conf = s.sessionState.newHadoopConf()
+    paths.map(p => bytesAt(FileSystem.get(new java.net.URI(p), conf), p)).sum
+  }
+
+  private def bytesAt(fs: FileSystem, p: String): Long = {
+    val path = new Path(p)
+    if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
+  }
 
   /** Row-count flavor of [[widthFor]] for writes whose row count is
     * already a driver scalar (quantizer matrices, the 1-row width — a

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.streaming.checkpointing
+  .FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -1240,49 +1242,137 @@ class StreamOpsSpec extends SparkSpec {
     // r10 review finding: per-invocation state/checkpoint dirs and
     // memory-sink views must not accumulate across repeated bench /
     // verify runs — the result is materialized first, so it must stay
-    // readable after the scratch is gone
-    def scratch(): Set[String] =
-      new java.io.File("/tmp").list().toSet
-        .filter(n => n.startsWith("graft_merge_state_") ||
-          n.startsWith("graft_merge_ckpt_"))
-    val before = scratch()
-    val merged = StreamOps.qStreamMerge.fn(spark, sf001)
-    assert(merged.count() > 0)          // result survives the cleanup
-    assert(scratch() == before,
-      s"leaked: ${(scratch() -- before).mkString(",")}")
-    val bucketed = StreamOps.qStreamMergeBucketed.fn(spark, sf001)
-    assert(bucketed.count() > 0)
-    assert(scratch() == before)
-    // both paths agree with each other (same oracle)
-    assert(merged.collect().map(_.toString).sorted
-      .sameElements(bucketed.collect().map(_.toString).sorted))
-    val viewsBefore = spark.catalog.listTables().count()
-    assert(StreamOps.qStreamHourly.fn(spark, sf001).count() > 0)
-    assert(spark.catalog.listTables().count() == viewsBefore,
-      "memory-sink temp view leaked")
+    // readable after the scratch is gone. The queries run under a fresh
+    // scratch root that no other process writes to.
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_clean_root_").toString
+    def perRun(): Seq[String] = new java.io.File(root).list().toSeq
+      .filter(_.matches("graft_.*_(state|verd|ckpt)_.*"))
+    spark.conf.set("spark.graft.scratchRoot", root)
+    try {
+      val merged = StreamOps.qStreamMerge.fn(spark, sf001)
+      assert(merged.count() > 0)          // result survives the cleanup
+      assert(perRun().isEmpty, s"leaked: ${perRun().mkString(",")}")
+      val bucketed = StreamOps.qStreamMergeBucketed.fn(spark, sf001)
+      assert(bucketed.count() > 0)
+      assert(perRun().isEmpty, s"leaked: ${perRun().mkString(",")}")
+      // both paths agree with each other (same oracle)
+      assert(merged.collect().map(_.toString).sorted
+        .sameElements(bucketed.collect().map(_.toString).sorted))
+      val viewsBefore = spark.catalog.listTables().count()
+      assert(StreamOps.qStreamHourly.fn(spark, sf001).count() > 0)
+      assert(spark.catalog.listTables().count() == viewsBefore,
+        "memory-sink temp view leaked")
+      assert(perRun().isEmpty, s"leaked: ${perRun().mkString(",")}")
+    } finally spark.conf.unset("spark.graft.scratchRoot")
   }
 
   test("a chain whose step fails restores the session conf and leaves no " +
     "per-run scratch") {
     val alt = java.nio.file.Files
       .createTempDirectory("graft_fail_root_").toString
-    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
-    val before = keys.map(spark.conf.get)
+    val isolation = "spark.sql.artifact.isolation.enabled"
+    val manager = "spark.sql.streaming.checkpointFileManagerClass"
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.enabled", isolation, manager)
+    val before = keys.map(spark.conf.getOption)
+    assert(before.last.isEmpty, s"$manager set outside a stream scope")
     spark.conf.set("spark.graft.scratchRoot", alt)
     try {
       // the seed commits v=0 and the stream creates its checkpoint before
-      // the first batch's step throws
+      // the first batch's step throws; the step sees the stream's session
+      @volatile var inScope = Seq.empty[Option[String]]
       val failing = StreamOps.annChain(spark, sf001).copy(
-        step = (_, _, _) => throw new IllegalStateException("step failed"))
+        step = (_, batch, _) => {
+          inScope = Seq(isolation, manager).map(batch.sparkSession.conf.getOption)
+          throw new IllegalStateException("step failed")
+        })
       val e = intercept[Exception](VersionChain.run(spark, failing)(_ => ()))
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(_.isInstanceOf[IllegalStateException]), e)
-      assert(keys.map(spark.conf.get) == before,
+      // a file: root gets the FileSystem-based manager inside the scope
+      assert(inScope == Seq(Some("false"),
+        Some(classOf[FileSystemBasedCheckpointFileManager].getName)), inScope)
+      assert(keys.map(spark.conf.getOption) == before,
         "withStatePartitions did not restore the session conf")
       val leaked = new java.io.File(alt).list().toSeq
         .filter(_.matches("graft_.*_(state|verd|ckpt)_.*"))
       assert(leaked.isEmpty, s"leaked: ${leaked.mkString(",")}")
     } finally spark.conf.unset("spark.graft.scratchRoot")
+  }
+
+  /** Call sites of the jobs `body` starts, on any thread: a job's
+    * result stage is named after it. A streaming query's own jobs carry
+    * the query's `start` call site. Marker jobs before and after bound
+    * the window: a listener sees events in the order they were posted. */
+  private def jobSitesOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val mark = s"sites-${java.util.UUID.randomUUID}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    @volatile var open = false
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        p.flatMap(q => Option(q.getProperty("spark.job.description"))) match {
+          case Some(d) if d == s"$mark-start" => open = true
+          case Some(d) if d == s"$mark-end" =>
+            open = false; drained.countDown()
+          case _ if open => sites.add(e.stageInfos.maxBy(_.stageId).name)
+          case _ =>
+        }
+      }
+    }
+    def marker(d: String): Unit = {
+      sc.setJobDescription(d)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(s"$mark-start")
+      body
+      marker(s"$mark-end")
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never drained")
+      import scala.jdk.CollectionConverters._
+      sites.asScala.toSeq
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a chain reads back what it wrote with the schema it wrote: no " +
+    "schema-inference job on its own files") {
+    val sf01 = sf001.replace("sf0.001", "sf0.01")
+    import org.apache.spark.sql.types.StructType
+    var schemas = Seq.empty[(String, StructType, StructType)]
+    val sites = jobSitesOf {
+      schemas = VersionChain.run(spark, StreamOps.annChain(spark, sf01)) {
+        c => c.committed.map { v =>
+          (c.path("v", v), c.read(v).schema,
+            spark.read.parquet(c.path("v", v)).schema)
+        }
+      }
+    }
+    // the chain's own driver-side writes are seen; none of its reads
+    // runs an inference job
+    assert(sites.exists(_.startsWith("save at VersionChain")), sites)
+    assert(!sites.exists(_.startsWith("parquet at VersionChain")),
+      sites.mkString("\n"))
+    // the recorded schema is the one inference finds
+    assert(schemas.size == StreamOps.AnnIngestSlices.size + 1)
+    schemas.foreach { case (p, recorded, inferred) =>
+      assert(recorded == inferred, p)
+    }
+  }
+
+  test("a repeat run of q_stream_hourly compiles no generated code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sf01 = sf001.replace("sf0.001", "sf0.01")
+    val first = StreamOps.qStreamHourly.fn(spark, sf01).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = StreamOps.qStreamHourly.fn(spark, sf01).collect()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled)
+    assert(first.nonEmpty && second.sameElements(first))
   }
 
   test("stream width rule: ⌈bytes / 64 MB⌉, floor 1, capped at 1 << 20") {
@@ -1390,8 +1480,12 @@ class StreamOpsSpec extends SparkSpec {
     "receives all scratch, /tmp stays untouched") {
     val alt = java.nio.file.Files
       .createTempDirectory("graft_alt_root_").toString
-    def tmpScratch(): Set[String] =
-      new java.io.File("/tmp").list().toSet.filter(_.startsWith("graft_"))
+    // only the prefixes the two queries create: other JVMs on the same
+    // machine write other graft_ scratch to /tmp
+    val prefixes = Seq("graft_merge_", "graft_stream_split_",
+      "graft_stateful_split_", "graft_sink_ckpt_")
+    def tmpScratch(): Set[String] = new java.io.File("/tmp").list().toSet
+      .filter(n => prefixes.exists(n.startsWith))
     val before = tmpScratch()
     spark.conf.set("spark.graft.scratchRoot", alt)
     try {
